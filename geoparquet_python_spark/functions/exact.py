@@ -204,18 +204,20 @@ def build_concurrently(*thunks):
     sequential construction (each leg's plan and checkpoint content
     depend only on its own inputs; pinned by
     tests/test_llm_ops.py::test_build_concurrently_matches_sequential).
-    The first thunk exception (if any) is re-raised after all threads
-    join, so no leg is silently dropped."""
+    After all threads join, the failure of the LOWEST-index failing
+    thunk is re-raised, whatever order the threads failed in; every
+    other failure is attached to it as a note, so no leg's error is
+    silently dropped and the reported error does not vary run to run."""
     from pyspark import InheritableThread
 
     results: list = [None] * len(thunks)
-    errors: list = []
+    errors: dict[int, BaseException] = {}
 
     def run(i, fn):
         try:
             results[i] = fn()
         except BaseException as e:  # noqa: BLE001 — re-raised below
-            errors.append(e)
+            errors[i] = e
 
     threads = [
         InheritableThread(target=run, args=(i, fn))
@@ -226,7 +228,10 @@ def build_concurrently(*thunks):
     for t in threads:
         t.join()
     if errors:
-        raise errors[0]
+        first, *others = sorted(errors)
+        for i in others:
+            errors[first].add_note(f"thunk {i} also failed: {errors[i]!r}")
+        raise errors[first]
     return results
 
 

@@ -21,6 +21,8 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
@@ -35,9 +37,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-_BBOX_TYPE = StructType(
-    [StructField(n, DoubleType()) for n in ("xmin", "ymin", "xmax", "ymax")]
-)
+BBOX_FIELDS = ["xmin", "ymin", "xmax", "ymax"]
+_BBOX_TYPE = StructType([StructField(n, DoubleType()) for n in BBOX_FIELDS])
 
 from geoparquet_python_spark.geo import wkb
 
@@ -151,12 +152,9 @@ def st_y(g: pd.Series) -> pd.Series:
 
 @pandas_udf(_BBOX_TYPE)
 def st_envelope(g: pd.Series) -> pd.DataFrame:
-    """Bounding box struct (D4) — also the GeoParquet-1.1 covering column."""
-    out = np.full((len(g), 4), np.nan)
-    for i, v in enumerate(g):
-        if v is not None:
-            out[i] = wkb.bbox(wkb.decode(v))
-    return pd.DataFrame(out, columns=["xmin", "ymin", "xmax", "ymax"])
+    """Bounding box struct (D4) — also the GeoParquet-1.1 covering
+    column. One columnar ``wkb.bounds`` call per Arrow batch."""
+    return pd.DataFrame(wkb.bounds(pa.array(g, pa.binary())), columns=BBOX_FIELDS)
 
 
 @pandas_udf(BooleanType())
@@ -166,22 +164,30 @@ def st_envelope_intersects(
     """ST_EnvelopeIntersects(geom, x0, y0, x1, y1): does the geometry's
     envelope overlap the window? The exact per-row refine behind the
     SQL-string pushdown rewrite (geo/sqlrewrite.py) — same predicate
-    spatial_window_filter applies through the DataFrame API."""
-    out = []
-    for v, a, b, c, d in zip(g, x0, y0, x1, y1):
-        if v is None:
-            out.append(None)
-            continue
-        xmin, ymin, xmax, ymax = wkb.bbox(wkb.decode(v))
-        out.append(bool(xmin <= c and xmax >= a and ymin <= d and ymax >= b))
-    return pd.Series(out, dtype="object")
+    spatial_window_filter applies through the DataFrame API. Window
+    bounds compare as doubles (SQL decimal literals included), like the
+    covering-column conjuncts the rewrite puts beside it; a NULL
+    geometry gives NULL."""
+    b = wkb.bounds(pa.array(g, pa.binary()))
+    wx0, wy0, wx1, wy1 = (s.to_numpy("f8") for s in (x0, y0, x1, y1))
+    hit = (b[:, 0] <= wx1) & (b[:, 2] >= wx0) & (b[:, 1] <= wy1) & (b[:, 3] >= wy0)
+    out = pd.Series(hit, dtype="object")
+    out[g.isna().to_numpy()] = None
+    return out
 
 
 @pandas_udf(DoubleType())
 def st_area(g: pd.Series) -> pd.Series:
-    return pd.Series(
-        [np.nan if v is None else wkb.area(wkb.decode(v)) for v in g], dtype="f8"
+    """Planar area. A 21-byte Point row is exactly 0.0 from its type code
+    alone; every other non-null row decodes and takes ``wkb.area``."""
+    arr = pa.array(g, pa.binary())
+    point = (wkb.type_codes(arr) == wkb._POINT) & (
+        pc.binary_length(arr).to_numpy(zero_copy_only=False) == 21
     )
+    out = np.where(point, 0.0, np.nan)
+    for i in np.flatnonzero(~point & arr.is_valid().to_numpy(zero_copy_only=False)):
+        out[i] = wkb.area(wkb.decode(g.iat[i]))
+    return pd.Series(out)
 
 
 @pandas_udf(DoubleType())

@@ -17,8 +17,12 @@ footer metadata hop is pyarrow-on-the-driver, reading ONE footer.
 
 Geometry stays WKB ``BinaryType`` end-to-end; nothing decodes at scan
 time (decode is per-operator, SURVEY.md §1.1). An optional GeoParquet
-1.1-style ``bbox`` covering struct is materialized at write so spatial
-predicates push down to row-group stats (§4.3).
+1.1 ``bbox`` covering struct is materialized at write, and declared in
+the footer's ``covering`` entry, so spatial predicates push down to
+row-group stats (§4.3). The writer makes ONE Python hop: the same
+``mapInArrow`` pass that stamps the footer computes the covering from
+each Arrow batch's geometry buffers (``wkb.bounds``), so the geometry
+column is not shipped to Python a second time by a separate UDF stage.
 """
 
 from __future__ import annotations
@@ -32,12 +36,14 @@ from typing import Any
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from geoparquet_python_spark.geo.functions import st_envelope
+from geoparquet_python_spark.geo import wkb
+from geoparquet_python_spark.geo.functions import BBOX_FIELDS, st_envelope
 
 GEO_KEY = b"geo"
 # Pre-spec key the reference used (SURVEY.md §0.2 — exact name uncertain,
@@ -45,6 +51,7 @@ GEO_KEY = b"geo"
 LEGACY_KEY = b"geometry_fields"
 
 SPEC_VERSION = "1.1.0"
+COVERING_COL = "bbox"  # the GeoParquet 1.1 bbox covering column
 
 
 _WKB_TYPE_NAMES = {
@@ -62,12 +69,18 @@ def _geo_column_entry(
     crs: Any,
     bbox: list | None,
     geometry_types: list[str] | None = None,
+    covering: bool = False,
 ) -> dict[str, Any]:
     col: dict[str, Any] = {"encoding": "WKB", "geometry_types": geometry_types or []}
     if crs is not None:
         col["crs"] = crs
     if bbox is not None:
         col["bbox"] = bbox
+    if covering:
+        # GeoParquet 1.1 covering: where each bound lives in the bbox column.
+        col["covering"] = {
+            "bbox": {f: [COVERING_COL, f] for f in BBOX_FIELDS}
+        }
     return col
 
 
@@ -77,16 +90,17 @@ def _geo_metadata_json(
     bbox: list | None,
     geometry_types: list[str] | None = None,
     extra_cols: dict[str, dict] | None = None,
+    covering: bool = False,
 ) -> bytes:
     """Spec `geo` doc: the primary column entry plus any SECONDARY
     geometry columns (GeoParquet allows several; exactly one is
     primary_column). Secondaries carry encoding/crs/geometry_types;
-    the dataset bbox rides on the primary."""
+    the dataset bbox and the covering declaration ride on the primary."""
     doc = {
         "version": SPEC_VERSION,
         "primary_column": geometry_col,
         "columns": {
-            geometry_col: _geo_column_entry(crs, bbox, geometry_types),
+            geometry_col: _geo_column_entry(crs, bbox, geometry_types, covering),
             **(extra_cols or {}),
         },
     }
@@ -94,32 +108,10 @@ def _geo_metadata_json(
 
 
 def _wkb_type_codes(arr: pa.Array) -> set[int]:
-    """Vectorized WKB geometry-type-code extraction from a pyarrow
-    binary array: byte 0 is the byte order, bytes 1-4 the uint32 type
-    code. Runs on numpy views of the Arrow offsets/data buffers — no
-    per-row Python in the write hot path."""
-    if arr.null_count == len(arr) or len(arr) == 0:
-        return set()
-    off_dtype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-    validity, offsets_buf, data_buf = arr.buffers()
-    offsets = np.frombuffer(offsets_buf, dtype=off_dtype)[
-        arr.offset : arr.offset + len(arr) + 1
-    ]
-    data = np.frombuffer(data_buf, dtype=np.uint8)
-    starts = offsets[:-1].astype(np.int64)
-    if validity is not None:
-        mask = np.unpackbits(
-            np.frombuffer(validity, dtype=np.uint8), bitorder="little"
-        )[arr.offset : arr.offset + len(arr)].astype(bool)
-        starts = starts[mask]
-    if starts.size == 0:
-        return set()
-    order = data[starts]  # 1 = little-endian, 0 = big-endian
-    b = [data[starts + i].astype(np.uint32) for i in (1, 2, 3, 4)]
-    le = b[0] | (b[1] << 8) | (b[2] << 16) | (b[3] << 24)
-    be = (b[0] << 24) | (b[1] << 16) | (b[2] << 8) | b[3]
-    codes = np.where(order == 1, le, be)
-    return set(int(c) for c in np.unique(codes))
+    """Distinct raw WKB geometry-type codes of a pyarrow binary array,
+    read from its buffers by ``wkb.type_codes`` (no per-row Python)."""
+    codes = wkb.type_codes(arr)
+    return set(int(c) for c in np.unique(codes[codes >= 0]))
 
 
 def _type_code_names(codes: set[int]) -> list[str]:
@@ -139,8 +131,20 @@ def add_bbox_column(df: DataFrame, geometry_col: str = "geometry") -> DataFrame:
     """Materialize the GeoParquet-1.1 covering column: a
     {xmin,ymin,xmax,ymax} struct. Plain comparisons against its fields
     are pushed to Parquet row-group stats by Spark's scan — this column
-    IS the spatial index at 100 TB."""
-    return df.withColumn("bbox", st_envelope(F.col(geometry_col)))
+    IS the spatial index at 100 TB. ``write_geoparquet`` builds the same
+    column inside its own pass (``_covering_column``) instead."""
+    return df.withColumn(COVERING_COL, st_envelope(F.col(geometry_col)))
+
+
+def _covering_column(geometry: pa.Array) -> pa.StructArray:
+    """The covering struct of one Arrow batch, from ``wkb.bounds``. NaN
+    (null geometry) bounds become null fields, as Spark makes them when
+    ``st_envelope`` returns the same values through a pandas UDF."""
+    b = wkb.bounds(geometry)
+    return pa.StructArray.from_arrays(
+        [pa.array(b[:, i], pa.float64(), from_pandas=True) for i in range(4)],
+        names=BBOX_FIELDS,
+    )
 
 
 def write_geoparquet(
@@ -157,7 +161,11 @@ def write_geoparquet(
     OGC ``geo`` key-value metadata — written by pyarrow inside
     ``mapInArrow``, so the stamping is executor-side and single-pass
     (the reference's ``replace_schema_metadata`` + ``pq.write_table``,
-    geoparquet/__init__.py:35–40≈, parallelized).
+    geoparquet/__init__.py:35–40≈, parallelized). With
+    ``bbox_covering`` (and no ``bbox`` column already in ``df``) the
+    covering struct is computed in that same pass from each batch's
+    geometry buffers and appended as the last column: the write has one
+    Python hop and no ``ArrowEvalPython`` stage.
 
     Task-commit protocol (retries/speculation are routine at 100 TB):
     each attempt writes to a hidden temp name derived from
@@ -174,8 +182,8 @@ def write_geoparquet(
     for c in [geometry_col, *secondary]:
         if c not in df.columns:
             raise ValueError(f"geometry column {c!r} not in {df.columns}")
-    if bbox_covering and "bbox" not in df.columns:
-        df = add_bbox_column(df, geometry_col)
+    # The covering column is either given or computed per batch below.
+    compute_covering = bbox_covering and COVERING_COL not in df.columns
 
     os.makedirs(path, exist_ok=True)
 
@@ -194,36 +202,27 @@ def write_geoparquet(
         # exchange already has) and stamp true per-file stats at open.
         buffered: list[pa.RecordBatch] = []
         rows = 0
-        xmin = ymin = float("inf")
-        xmax = ymax = float("-inf")
+        ext = [float("inf")] * 2 + [float("-inf")] * 2  # xmin ymin xmax ymax
         codes: set[int] = set()
         sec_codes: dict[str, set[int]] = {c: set() for c in secondary}
         for batch in batches:
+            if compute_covering:
+                batch = batch.append_column(
+                    COVERING_COL, _covering_column(batch.column(geometry_col))
+                )
             buffered.append(batch)
             rows += batch.num_rows
             codes |= _wkb_type_codes(batch.column(geometry_col))
             for c in secondary:
                 sec_codes[c] |= _wkb_type_codes(batch.column(c))
-            if "bbox" in batch.schema.names:
-                import pyarrow.compute as pc
-
-                box = batch.column("bbox")
-                for field, agg in (
-                    ("xmin", "min"), ("ymin", "min"), ("xmax", "max"), ("ymax", "max")
-                ):
-                    v = getattr(pc, agg)(pc.struct_field(box, field)).as_py()
-                    if v is None:
-                        continue
-                    if agg == "min":
-                        if field == "xmin":
-                            xmin = min(xmin, v)
-                        else:
-                            ymin = min(ymin, v)
-                    elif field == "xmax":
-                        xmax = max(xmax, v)
-                    else:
-                        ymax = max(ymax, v)
-        bbox = [xmin, ymin, xmax, ymax] if xmin <= xmax else None
+            if COVERING_COL in batch.schema.names:
+                box = batch.column(COVERING_COL)
+                for i, field in enumerate(BBOX_FIELDS):
+                    lower = i < 2
+                    v = (pc.min if lower else pc.max)(pc.struct_field(box, field)).as_py()
+                    if v is not None:
+                        ext[i] = min(ext[i], v) if lower else max(ext[i], v)
+        bbox = ext if ext[0] <= ext[2] else None
         meta_json = _geo_metadata_json(
             geometry_col,
             crs,
@@ -233,6 +232,7 @@ def write_geoparquet(
                 c: _geo_column_entry(crs, None, _type_code_names(sec_codes[c]))
                 for c in secondary
             },
+            covering=bbox_covering,
         )
         writer = None
         try:
@@ -259,6 +259,10 @@ def write_geoparquet(
         # Every partition was empty: emit one schema-only part so the
         # directory is a valid (zero-row) GeoParquet dataset.
         tbl = df.limit(0).toArrow()
+        if compute_covering:
+            tbl = tbl.append_column(
+                COVERING_COL, _covering_column(tbl.column(geometry_col).combine_chunks())
+            )
         tbl = tbl.replace_schema_metadata(
             {**(tbl.schema.metadata or {}),
              GEO_KEY: _geo_metadata_json(
@@ -266,6 +270,7 @@ def write_geoparquet(
                  extra_cols={
                      c: _geo_column_entry(crs, None, []) for c in secondary
                  },
+                 covering=bbox_covering,
              )}
         )
         pq.write_table(tbl, os.path.join(path, "part-00000.parquet"))

@@ -6,7 +6,10 @@ Reference parity: the reference round-trips geometry as WKB via shapely
 codec is a self-contained batch library: decode/encode whole pandas
 Series of WKB bytes inside one pandas-UDF call, with a numpy
 ``frombuffer`` fast path for the all-points case (zero per-row Python in
-the common layout).
+the common layout). ``bounds`` and ``type_codes`` go one step further
+and read a pyarrow binary array's offsets, validity and data buffers
+directly, so envelopes and type codes of a whole Arrow batch cost a few
+numpy gathers.
 
 Supported: 2-D Point, LineString, Polygon (with holes), MultiPoint,
 MultiLineString, MultiPolygon, GeometryCollection; both byte orders on
@@ -27,6 +30,7 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+import pyarrow as pa
 
 _POINT, _LINESTRING, _POLYGON = 1, 2, 3
 _MULTIPOINT, _MULTILINESTRING, _MULTIPOLYGON = 4, 5, 6
@@ -180,6 +184,125 @@ def decode_points(bufs) -> tuple[np.ndarray, np.ndarray]:
             raise ValueError(f"expected Point, got {kind}")
         xs[i], ys[i] = val
     return xs, ys
+
+
+# ---------------------------------------------- columnar Arrow-buffer paths
+
+
+def _arrow_views(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """numpy views of a pyarrow binary array's buffers: (data bytes,
+    per-row start, per-row length, per-row validity). Honors the array
+    offset, so sliced arrays work; nothing is copied but the offsets."""
+    if not (pa.types.is_binary(arr.type) or pa.types.is_large_binary(arr.type)):
+        raise TypeError(f"expected a binary Arrow array, got {arr.type}")
+    n = len(arr)
+    if n == 0:
+        empty = np.zeros(0, dtype=np.int64)
+        return np.zeros(0, dtype=np.uint8), empty, empty, np.zeros(0, dtype=bool)
+    validity, offsets_buf, data_buf = arr.buffers()
+    off_dtype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    offsets = np.frombuffer(offsets_buf, dtype=off_dtype)[
+        arr.offset : arr.offset + n + 1
+    ].astype(np.int64)
+    data = (
+        np.frombuffer(data_buf, dtype=np.uint8)
+        if data_buf is not None
+        else np.zeros(0, dtype=np.uint8)
+    )
+    if validity is None:
+        valid = np.ones(n, dtype=bool)
+    else:
+        valid = np.unpackbits(
+            np.frombuffer(validity, dtype=np.uint8), bitorder="little"
+        )[arr.offset : arr.offset + n].astype(bool)
+    return data, offsets[:-1], np.diff(offsets), valid
+
+
+_POLY_COORDS = 13  # byte offset of a single-ring WKB Polygon's first coordinate
+
+
+def _records(data: np.ndarray, starts: np.ndarray, dtype) -> np.ndarray:
+    """Gather one ``dtype`` record at each byte position of ``data``.
+    Indexes an overlapping view that has a record at every byte offset,
+    so each row costs one fixed-size copy, not one index per byte."""
+    dt = np.dtype(dtype)
+    view = np.ndarray(
+        shape=(max(data.size - dt.itemsize + 1, 0),),
+        dtype=f"V{dt.itemsize}",
+        buffer=data,
+        strides=(1,),
+    )
+    return view[starts].view(dt)
+
+
+def type_codes(arr: pa.Array) -> np.ndarray:
+    """Per-row raw WKB geometry-type code (either byte order) read from
+    the Arrow buffers; -1 for null rows and rows shorter than a header."""
+    data, starts, lens, valid = _arrow_views(arr)
+    codes = np.full(len(starts), -1, dtype=np.int64)
+    ok = np.flatnonzero(valid & (lens >= 5))
+    if ok.size:
+        raw = _records(data, starts[ok] + 1, "V4")
+        codes[ok] = np.where(data[starts[ok]] == 1, raw.view("<u4"), raw.view(">u4"))
+    return codes
+
+
+def bounds(arr: pa.Array) -> np.ndarray:
+    """(n, 4) float64 envelopes ``(xmin, ymin, xmax, ymax)`` of a binary
+    (or large_binary) Arrow array of WKB, read straight from its buffers.
+
+    Little-endian 21-byte Points take one gather; little-endian
+    single-ring Polygons take a gather plus ``minimum/maximum.reduceat``
+    over their coordinates. Every other row goes through
+    ``bbox(decode(v))``, and the fast paths reproduce it exactly: NaN
+    for null rows, ``(inf, inf, -inf, -inf)`` for empty geometries, and
+    an axis whose coordinates hold a NaN gets that empty bound too.
+    The result is a transposed view of a (4, n) array, so each bound
+    column is contiguous."""
+    data, starts, lens, valid = _arrow_views(arr)
+    cols = np.full((4, len(starts)), np.nan)
+    fast = np.zeros(len(starts), dtype=bool)
+    cand = np.flatnonzero(valid & (lens >= _POLY_COORDS))
+    if cand.size:
+        s, clen = starts[cand], lens[cand]
+        le = data[s] == 1
+        code = _records(data, s + 1, "<u4")
+
+        pt = cand[le & (code == _POINT) & (clen == 21)]
+        if pt.size:
+            xy = _records(data, starts[pt] + 5, ("<f8", 2))
+            _put_bounds(cols, pt, xy, xy)
+            fast[pt] = True
+
+        pg = np.flatnonzero(le & (code == _POLYGON))
+        rings = _records(data, s[pg] + 5, "<u4")
+        k = _records(data, s[pg] + 9, "<u4").astype(np.int64)  # ring 0 points
+        keep = (rings == 1) & (k >= 1) & (clen[pg] == _POLY_COORDS + 16 * k)
+        pg, k = cand[pg[keep]], k[keep]
+        if pg.size:
+            seg = np.cumsum(k) - k  # first coordinate of each polygon
+            pos = np.repeat(starts[pg] + _POLY_COORDS - 16 * seg, k)
+            pos += 16 * np.arange(k.sum())
+            xy = _records(data, pos, ("<f8", 2))
+            with np.errstate(invalid="ignore"):
+                lo = np.minimum.reduceat(xy, seg, axis=0)
+                hi = np.maximum.reduceat(xy, seg, axis=0)
+            _put_bounds(cols, pg, lo, hi)
+            fast[pg] = True
+
+    for i in np.flatnonzero(valid & ~fast):
+        at = starts[i]
+        cols[:, i] = bbox(decode(data[at : at + lens[i]].tobytes()))
+    return cols.T
+
+
+def _put_bounds(cols: np.ndarray, rows: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> None:
+    """Store (m, 2) per-row minima and maxima into the (4, n) columns.
+    A NaN extreme becomes the empty bound, as in ``bbox``: numpy's min
+    propagates the NaN and Python's ``min(inf, nan)`` keeps ``inf``."""
+    for c in (0, 1):
+        cols[c, rows] = np.fmin(lo[:, c], np.inf)
+        cols[c + 2, rows] = np.fmax(hi[:, c], -np.inf)
 
 
 # ------------------------------------------------------ geometry measures

@@ -161,3 +161,123 @@ def test_wkt():
     assert wkb.to_wkt(("Point", (1.5, -2.0))) == "POINT (1.5 -2)"
     sq = ring([(0, 0), (1, 0), (1, 1), (0, 1)])
     assert wkb.to_wkt(("Polygon", [sq])).startswith("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")
+
+
+# ------------------------------------------- columnar kernel vs per-row path
+
+
+def _encode_be(geom: tuple) -> bytes:
+    """Big-endian WKB encoder (the codec only writes little-endian)."""
+    import struct
+
+    kind, val = geom
+    head = b"\x00" + struct.pack(">I", wkb._CODES[kind])
+
+    def coords(a):
+        a = np.asarray(a, dtype="f8").reshape(-1, 2)
+        return struct.pack(">I", len(a)) + a.astype(">f8").tobytes()
+
+    if kind == "Point":
+        return head + struct.pack(">dd", *val)
+    if kind == "LineString":
+        return head + coords(val)
+    if kind == "Polygon":
+        return head + struct.pack(">I", len(val)) + b"".join(coords(r) for r in val)
+    if kind == "MultiPoint":
+        parts = [("Point", tuple(p)) for p in np.asarray(val).reshape(-1, 2)]
+    elif kind == "MultiLineString":
+        parts = [("LineString", v) for v in val]
+    elif kind == "MultiPolygon":
+        parts = [("Polygon", v) for v in val]
+    else:
+        parts = val
+    return head + struct.pack(">I", len(parts)) + b"".join(_encode_be(p) for p in parts)
+
+
+_SQUARE = ring([(0, 0), (10, 0), (10, 10), (0, 10)])
+_HOLE = ring([(4, 4), (6, 4), (6, 6), (4, 6)])
+_KINDS = [
+    ("Point", (3.5, -7.25)),
+    ("LineString", np.array([(0.0, 1.0), (2.0, -3.0), (5.0, 4.0)])),
+    ("Polygon", [ring([(1, -2), (5, 0), (3, 7)])]),
+    ("Polygon", [_SQUARE, _HOLE]),  # multi-ring
+    ("MultiPoint", np.array([(5.0, -1.0), (6.0, 7.0)])),
+    ("MultiLineString", [np.array([(0.0, 0.0), (1.0, 1.0)]), np.array([(-4.0, 2.0), (3.0, 9.0)])]),
+    ("MultiPolygon", [[_SQUARE], [ring([(20, 20), (30, 20), (25, 28)])]]),
+    ("GeometryCollection", [("Point", (-9.0, 9.0)), ("LineString", np.array([(1.0, 2.0), (3.0, 4.0)]))]),
+]
+_EMPTY = [
+    ("LineString", np.zeros((0, 2))),
+    ("Polygon", []),
+    ("Polygon", [np.zeros((0, 2))]),
+    ("MultiPoint", np.zeros((0, 2))),
+    ("GeometryCollection", []),
+    ("Point", (float("nan"), float("nan"))),  # POINT EMPTY
+    ("Polygon", [ring([(0, 0), (float("nan"), 1), (2, 2)])]),  # NaN on one axis
+]
+
+
+def _reference(vals) -> np.ndarray:
+    """The per-row envelope the columnar kernel must reproduce."""
+    return np.array(
+        [[np.nan] * 4 if v is None else wkb.bbox(wkb.decode(v)) for v in vals],
+        dtype="f8",
+    ).reshape(-1, 4)
+
+
+def _assert_bounds_match(arr):
+    vals = arr.to_pylist()
+    got = wkb.bounds(arr)
+    assert got.shape == (len(vals), 4)
+    assert np.array_equal(got, _reference(vals), equal_nan=True)
+    want_codes = [
+        -1 if v is None else wkb._CODES[wkb.decode(v)[0]] for v in vals
+    ]
+    assert wkb.type_codes(arr).tolist() == want_codes
+
+
+def test_bounds_matches_bbox_every_kind_both_byte_orders():
+    import pyarrow as pa
+
+    geoms = _KINDS + _EMPTY
+    vals = [wkb.encode(g) for g in geoms] + [_encode_be(g) for g in geoms]
+    for g, le, be in zip(geoms, vals, vals[len(geoms):]):
+        assert wkb.decode(le)[0] == wkb.decode(be)[0] == g[0]
+    vals = [None, *vals[:5], None, *vals[5:], None]
+    _assert_bounds_match(pa.array(vals, pa.binary()))
+
+
+def test_bounds_sliced_large_binary_and_all_null():
+    import pyarrow as pa
+
+    vals = [wkb.encode(g) for g in _KINDS + _EMPTY] + [None]
+    for typ in (pa.binary(), pa.large_binary()):
+        arr = pa.array(vals * 3, typ)
+        sliced = arr.slice(5, len(vals) + 3)
+        assert sliced.offset == 5
+        _assert_bounds_match(sliced)
+        _assert_bounds_match(arr.slice(0, 0))
+        _assert_bounds_match(pa.array([None, None], typ))
+    with pytest.raises(TypeError):
+        wkb.bounds(pa.array(["POINT (1 2)"]))
+
+
+def test_bounds_seeded_mixed_points_and_polygons():
+    """The lake layout: mostly 21-byte points, some single-ring convex
+    polygons, nulls, in random order — every row equal to the per-row
+    path, bit for bit."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(7)
+    n = 3000
+    x, y = rng.uniform(-180, 180, n), rng.uniform(-90, 90, n)
+    vals = wkb.encode_points(x, y)
+    for i in np.flatnonzero(rng.random(n) < 0.2):
+        k = int(rng.integers(3, 9))
+        ang = np.sort(rng.uniform(0.0, 2 * np.pi, k))
+        r = float(rng.uniform(0.001, 0.5))
+        pts = np.column_stack([x[i] + r * np.cos(ang), y[i] + r * np.sin(ang)])
+        vals[i] = wkb.encode(("Polygon", [np.vstack([pts, pts[:1]])]))
+    for i in np.flatnonzero(rng.random(n) < 0.01):
+        vals[i] = None
+    _assert_bounds_match(pa.array(vals, pa.binary()))

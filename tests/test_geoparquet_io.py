@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 import shutil
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -365,3 +366,118 @@ def test_multi_geometry_metadata_on_both_columns(spark, sf_dir, tmp_path):
     assert fields["geometry"].metadata["geo_primary"] is True
     assert fields["dest"].metadata["geo_primary"] is False
     assert fields["dest"].metadata["geo"]["encoding"] == "WKB"
+
+
+def _mixed_geometry_df(spark):
+    """Points, single- and multi-ring polygons, other kinds, NULL and
+    empty geometries over several partitions."""
+    sq = [(0.0, 0.0), (4.0, 0.0), (4.0, 4.0), (0.0, 4.0), (0.0, 0.0)]
+    hole = [(1.0, 1.0), (2.0, 1.0), (2.0, 2.0), (1.0, 1.0)]
+    geoms = [
+        wkb.encode(("Point", (1.5, -2.0))),
+        wkb.encode(("Polygon", [sq])),
+        wkb.encode(("Polygon", [sq, hole])),
+        wkb.encode(("LineString", [(-3.0, 1.0), (7.0, 2.0)])),
+        wkb.encode(("MultiPoint", [(9.0, 9.0), (-9.0, 8.0)])),
+        wkb.encode(("LineString", [])),
+        wkb.encode(("Point", (float("nan"), float("nan")))),
+        None,
+    ]
+    rows = [
+        (i, None if geoms[i % len(geoms)] is None else bytearray(geoms[i % len(geoms)]))
+        for i in range(40)
+    ]
+    return spark.createDataFrame(rows, "id long, geometry binary").repartition(3)
+
+
+def test_fused_covering_equals_add_bbox_column(spark, tmp_path):
+    """The writer computes the covering in its own mapInArrow pass; its
+    bbox column must equal add_bbox_column's (the st_envelope UDF) row
+    for row — NULL geometry gives NULL fields, empties keep ±inf."""
+    df = _mixed_geometry_df(spark)
+    out = str(tmp_path / "fused")
+    assert gio.write_geoparquet(df, out) == 40
+    got = {r.id: r.bbox for r in spark.read.parquet(out).select("id", "bbox").collect()}
+    want = {r.id: r.bbox for r in gio.add_bbox_column(df).select("id", "bbox").collect()}
+    assert got == want
+    assert want[7] == (None, None, None, None)
+    assert want[5] == (float("inf"), float("inf"), float("-inf"), float("-inf"))
+    assert list(spark.read.parquet(out).columns) == ["id", "geometry", "bbox"]
+
+
+def test_covering_metadata_stamped_and_merged(spark, tmp_path):
+    """GeoParquet 1.1: the primary column declares its bbox covering in
+    every part footer, and geo_metadata's per-file merge keeps it; a
+    write without the covering column declares none."""
+    import glob as _glob
+
+    want = {
+        "bbox": {
+            "xmin": ["bbox", "xmin"], "ymin": ["bbox", "ymin"],
+            "xmax": ["bbox", "xmax"], "ymax": ["bbox", "ymax"],
+        }
+    }
+    df = _mixed_geometry_df(spark)
+    out = str(tmp_path / "cov")
+    gio.write_geoparquet(df, out)
+    files = sorted(_glob.glob(f"{out}/*.parquet"))
+    assert len(files) == 3
+    for f in files:
+        doc = json.loads(pq.ParquetFile(f).schema_arrow.metadata[gio.GEO_KEY])
+        assert doc["columns"]["geometry"]["covering"] == want
+    meta = gio.geo_metadata(out)
+    assert meta["columns"]["geometry"]["covering"] == want
+    assert meta["columns"]["geometry"]["bbox"] == [-9.0, -2.0, 9.0, 9.0]
+
+    bare = str(tmp_path / "bare")
+    gio.write_geoparquet(df, bare, bbox_covering=False)
+    assert "covering" not in gio.geo_metadata(bare)["columns"]["geometry"]
+    assert "bbox" not in spark.read.parquet(bare).columns
+
+    empty = str(tmp_path / "empty")
+    assert gio.write_geoparquet(df.where(F.lit(False)), empty) == 0
+    assert gio.geo_metadata(empty)["columns"]["geometry"]["covering"] == want
+    assert "bbox" in spark.read.parquet(empty).columns
+
+
+def test_vectorized_read_udfs_keep_row_semantics(spark):
+    """st_envelope_intersects and st_area run on the columnar kernel:
+    NULL geometry still gives NULL, Point rows have area exactly 0.0,
+    polygon areas stay bit-identical to the per-row wkb.area, and SQL
+    decimal window literals compare as doubles."""
+    from decimal import Decimal
+
+    import pandas as pd
+
+    from geoparquet_python_spark.geo.functions import (
+        register_sql,
+        st_area,
+        st_envelope_intersects,
+    )
+
+    poly = wkb.encode(("Polygon", [[(0.1, 0.2), (3.3, 0.4), (1.7, 2.9), (0.1, 0.2)]]))
+    holed = wkb.encode((
+        "Polygon",
+        [[(0.0, 0.0), (4.0, 0.0), (4.0, 4.0), (0.0, 0.0)],
+         [(2.0, 1.0), (3.0, 1.0), (3.0, 2.0), (2.0, 1.0)]],
+    ))
+    g = pd.Series([wkb.encode(("Point", (5.0, 5.0))), None, poly, holed,
+                   wkb.encode(("Point", (-1.0, 0.5)))])
+    area = st_area.func(g)
+    assert area[0] == 0.0 and area[4] == 0.0 and np.isnan(area[1])
+    assert area[2] == wkb.area(wkb.decode(poly))
+    assert area[3] == wkb.area(wkb.decode(holed))
+
+    win = [pd.Series([v] * len(g)) for v in (Decimal("0.0"), Decimal("0.0"),
+                                              Decimal("4.5"), Decimal("4.5"))]
+    hit = st_envelope_intersects.func(g, *win)
+    assert hit.tolist() == [False, None, True, True, False]
+
+    register_sql(spark)
+    rows = spark.sql(
+        "SELECT ST_EnvelopeIntersects(g, 0.0, 0.0, 4.5, 4.5) AS hit, ST_Area(g) AS a "
+        "FROM (SELECT 0 AS i, CAST(NULL AS BINARY) AS g "
+        "UNION ALL SELECT 1, ST_Point(1.0D, 1.0D)) ORDER BY i"
+    ).collect()
+    assert rows[0].hit is None and rows[0].a is None
+    assert (rows[1].hit, rows[1].a) == (True, 0.0)

@@ -2416,6 +2416,29 @@ def test_build_concurrently_matches_sequential(spark, sf_dir_small):
         )
 
 
+def test_build_concurrently_raises_lowest_index_failure(spark):
+    """With several failing thunks, build_concurrently re-raises the
+    failure of the lowest thunk index even when a later thunk fails
+    first, and attaches the other failures as notes."""
+    import time
+
+    import pytest
+
+    from geoparquet_python_spark.functions.exact import build_concurrently
+
+    def slow_fail():
+        time.sleep(0.3)
+        raise ValueError("leg zero")
+
+    def fast_fail():
+        raise KeyError("leg two")
+
+    with pytest.raises(ValueError, match="leg zero") as info:
+        build_concurrently(slow_fail, lambda: 1, fast_fail)
+    notes = getattr(info.value, "__notes__", [])
+    assert len(notes) == 1 and "thunk 2" in notes[0] and "leg two" in notes[0]
+
+
 def test_sig_bitcount_kernel_tolerates_empty_batches():
     """ADVICE r12: MapInBatch paths may hand the kernel a zero-row
     Arrow batch under future Spark versions; it must skip it instead of

@@ -458,3 +458,104 @@ def test_bucketed_groupby_has_no_pre_agg_exchange(spark, sf_dir):
         "bucketing failed to remove the aggregation shuffle:\n" + below_agg
     )
     assert plan.count("Exchange") <= 1, "unexpected extra exchanges"
+
+
+# ----------------------------------------------------- GeoParquet geo.* plans
+
+_WINDOW = (10.0, 5.0, 50.0, 20.0)
+
+
+def _geo_frame(spark):
+    from pyspark.sql import functions as F
+
+    from geoparquet_python_spark.geo.functions import st_point
+
+    return spark.range(200).select(
+        "id", st_point(F.col("id") * 1.0, F.col("id") * 0.5).alias("geometry")
+    )
+
+
+def _full_plan(spark, df) -> str:
+    """Executed plan with untruncated scan metadata (PushedFilters)."""
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "100000")
+    try:
+        return df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_geoparquet_write_has_no_arrow_eval_python(spark, tmp_path, monkeypatch):
+    """The covering column is computed inside the writer's mapInArrow
+    pass: the executed write plan is scan → MapInArrow with no separate
+    ArrowEvalPython (pandas UDF) stage shipping geometry to Python."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from geoparquet_python_spark.geo import io as gio
+    from geoparquet_python_spark.geo import wkb
+
+    xs = np.arange(200, dtype="f8")
+    src = str(tmp_path / "src.parquet")
+    pq.write_table(
+        pa.table({"id": np.arange(200), "geometry": pa.array(
+            wkb.encode_points(xs, xs / 2), pa.binary())}),
+        src,
+    )
+    frame = spark.read.parquet(src)  # no UDF upstream of the writer
+    seen = []
+    real = type(frame).mapInArrow
+
+    def spy(self, *args, **kwargs):
+        out = real(self, *args, **kwargs)
+        seen.append(out)
+        return out
+
+    monkeypatch.setattr(type(frame), "mapInArrow", spy)
+    assert gio.write_geoparquet(frame, str(tmp_path / "w")) == 200
+    assert len(seen) == 1
+    plan = seen[0]._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan
+    assert "ArrowEvalPython" not in plan, plan
+
+
+@pytest.mark.parametrize("path", ["spatial_window_filter", "geo_sql"])
+def test_geo_read_covering_filter_below_udf(spark, tmp_path, path):
+    """Both read paths evaluate the envelope UDF only on coarse
+    survivors: the covering-column Filter sits below (runs before) the
+    first ArrowEvalPython, and the scan pushes all four bbox bounds."""
+    import re
+
+    from geoparquet_python_spark.geo import io as gio
+    from geoparquet_python_spark.geo.functions import spatial_window_filter
+    from geoparquet_python_spark.geo.sqlrewrite import geo_sql
+
+    out = str(tmp_path / "lake")
+    gio.write_geoparquet(_geo_frame(spark), out)
+    lake = gio.read_geoparquet(spark, out)
+    if path == "spatial_window_filter":
+        q = spatial_window_filter(lake, _WINDOW)
+    else:
+        lake.createOrReplaceTempView("plan_guard_lake")
+        q = geo_sql(
+            spark,
+            "SELECT id FROM plan_guard_lake WHERE ST_EnvelopeIntersects("
+            "geometry, 10.0, 5.0, 50.0, 20.0)",
+        )
+    plan = _full_plan(spark, q)
+    udf_at = plan.index("ArrowEvalPython")
+    m = re.search(r"Filter \([^\n]*bbox#\d+\.xmin <= 50\.0", plan)
+    assert m, "covering-column filter missing:\n" + plan
+    assert m.start() > udf_at, "covering filter runs above the UDF:\n" + plan
+    assert "ArrowEvalPython" not in plan[m.start():], plan
+    pushed = re.search(r"PushedFilters: \[([^\]]*)\]", plan).group(1)
+    for bound in (
+        "LessThanOrEqual(bbox.xmin,50.0)",
+        "GreaterThanOrEqual(bbox.xmax,10.0)",
+        "LessThanOrEqual(bbox.ymin,20.0)",
+        "GreaterThanOrEqual(bbox.ymax,5.0)",
+    ):
+        assert bound in pushed, f"{bound} not pushed: {pushed}"
+    assert q.count() == 31

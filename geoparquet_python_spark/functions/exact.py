@@ -24,6 +24,7 @@ codegen, no Python involved.
 from __future__ import annotations
 
 import gc
+import threading
 import weakref
 
 from pyspark.sql import Column
@@ -155,7 +156,10 @@ def spread(df):
 # between queries. Long-lived cross-query caches (_ENC_CACHE,
 # _KNN_EDGE_CACHE) hold the materialized wrapper itself, so their
 # weakrefs stay live and their blocks are never touched.
+# _LIVE_LOCK guards every append to and sweep of the list: materialize()
+# runs on build_concurrently's threads.
 _LIVE_CHECKPOINTS: list = []
+_LIVE_LOCK = threading.Lock()
 
 
 def materialize(df):
@@ -171,7 +175,8 @@ def materialize(df):
         # wrapping the persisted RDD — grab the JVM handle for the
         # dead-checkpoint sweeper.
         jrdd = out._jdf.queryExecution().analyzed().rdd()
-        _LIVE_CHECKPOINTS.append((weakref.ref(out), jrdd))
+        with _LIVE_LOCK:
+            _LIVE_CHECKPOINTS.append((weakref.ref(out), jrdd))
     except Exception:
         pass  # non-standard plan shape: fall back to async cleanup
     return out
@@ -198,8 +203,9 @@ def build_concurrently(*thunks):
     InheritableThread is PySpark's sanctioned wrapper so JVM
     thread-local properties (job description/group) are inherited and
     cleaned up. The one shared Python-side structure these thunks
-    touch, _LIVE_CHECKPOINTS, is only append()ed — atomic under the
-    GIL. The CALLER contracts that thunks are independent: none may
+    touch, _LIVE_CHECKPOINTS, is appended to and swept only under
+    _LIVE_LOCK, so a sweep running beside a build cannot drop a new
+    entry. The CALLER contracts that thunks are independent: none may
     consume another's frames. Results are then identical to
     sequential construction (each leg's plan and checkpoint content
     depend only on its own inputs; pinned by
@@ -247,15 +253,16 @@ def release_dead_checkpoints() -> int:
     only live wrappers are the module caches, which hold the
     materialized DataFrame itself."""
     gc.collect()  # collect dropped wrappers so their weakrefs clear
-    kept, freed = [], 0
-    for ref, jrdd in _LIVE_CHECKPOINTS:
-        if ref() is None:
-            try:
-                jrdd.unpersist(False)
-                freed += 1
-            except Exception:
-                pass
-        else:
-            kept.append((ref, jrdd))
-    _LIVE_CHECKPOINTS[:] = kept
+    with _LIVE_LOCK:
+        dead, kept = [], []
+        for entry in _LIVE_CHECKPOINTS:
+            (dead if entry[0]() is None else kept).append(entry)
+        _LIVE_CHECKPOINTS[:] = kept
+    freed = 0
+    for _, jrdd in dead:
+        try:
+            jrdd.unpersist(False)
+            freed += 1
+        except Exception:
+            pass
     return freed

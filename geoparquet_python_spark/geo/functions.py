@@ -40,7 +40,7 @@ from pyspark.sql.types import (
 BBOX_FIELDS = ["xmin", "ymin", "xmax", "ymax"]
 _BBOX_TYPE = StructType([StructField(n, DoubleType()) for n in BBOX_FIELDS])
 
-from geoparquet_python_spark.geo import wkb
+from geoparquet_python_spark.geo import covering, wkb
 
 # ------------------------------------------------------------- built-ins
 
@@ -103,12 +103,23 @@ def spatial_window_filter(
     Catalyst rule needed): ``ST_Intersects(geom, window)`` becomes plain
     bbox-field comparisons — which Spark pushes to Parquet row-group
     stats when ``bbox_col`` is a materialized covering column — plus an
-    exact per-geometry envelope refine for rows whose covering box
-    over-approximates (multi-part geometries).
+    exact per-geometry envelope refine (a pandas-UDF stage) for rows
+    whose covering box over-approximates the envelope.
+
+    A lake written by ``write_geoparquet`` with a computed covering
+    carries the exact-covering footer key, and ``read_geoparquet`` then
+    tags ``geometry_col`` and ``bbox_col`` with one per-read token. While
+    both columns still carry it and the frame's plan still reads them
+    from one scan of the unchanged vouched files (``covering.is_exact``),
+    the covering holds each row's exact envelope, the conjuncts already
+    are the refine, and the refine is not planned: the query keeps no
+    UDF stage of its own. A column replaced after the read, a join or
+    union, or a file rewritten since the read keeps the refine.
 
     window = (xmin, ymin, xmax, ymax)."""
     x0, y0, x1, y1 = window
     if bbox_col in df.columns:
+        skip_refine = not exact or covering.is_exact(df, geometry_col, bbox_col)
         b = F.col(bbox_col)
         coarse = (
             (b["xmin"] <= x1)
@@ -117,7 +128,7 @@ def spatial_window_filter(
             & (b["ymax"] >= y0)
         )
         df = df.where(coarse)  # pushdown-able: plain struct-field compares
-        if not exact:
+        if skip_refine:
             return df
     env = st_envelope(F.col(geometry_col))
     fine = (

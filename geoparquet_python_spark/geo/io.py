@@ -23,6 +23,15 @@ row-group stats (§4.3). The writer makes ONE Python hop: the same
 ``mapInArrow`` pass that stamps the footer computes the covering from
 each Arrow batch's geometry buffers (``wkb.bounds``), so the geometry
 column is not shipped to Python a second time by a separate UDF stage.
+
+A covering computed that way is the exact envelope of each row, so the
+writer also stamps ``EXACT_COVERING_KEY`` on every part footer (beside,
+not inside, the spec ``geo`` JSON). When every file a read scans
+carries it, ``read_geoparquet`` records the files with their size and
+mtime and tags the primary geometry and ``bbox`` columns with one
+per-read token (``geo.covering``). The window filters skip their
+per-row envelope refine for as long as a query reads both columns of
+one row, unreplaced, from those unchanged files.
 """
 
 from __future__ import annotations
@@ -42,7 +51,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from geoparquet_python_spark.geo import wkb
+from geoparquet_python_spark.geo import covering, wkb
 from geoparquet_python_spark.geo.functions import BBOX_FIELDS, st_envelope
 
 GEO_KEY = b"geo"
@@ -52,6 +61,9 @@ LEGACY_KEY = b"geometry_fields"
 
 SPEC_VERSION = "1.1.0"
 COVERING_COL = "bbox"  # the GeoParquet 1.1 bbox covering column
+# Footer key of a part file whose COVERING_COL this writer computed from
+# the geometry itself: the value names the column that is exact.
+EXACT_COVERING_KEY = b"geoparquet_python_spark.exact_covering"
 
 
 _WKB_TYPE_NAMES = {
@@ -105,6 +117,15 @@ def _geo_metadata_json(
         },
     }
     return json.dumps(doc).encode("utf-8")
+
+
+def _footer_metadata(schema_md: dict | None, geo_json: bytes, exact: bool) -> dict:
+    """Schema key-value metadata of one part file: the ``geo`` doc, plus
+    ``EXACT_COVERING_KEY`` when this writer computed the covering."""
+    md = {**(schema_md or {}), GEO_KEY: geo_json}
+    if exact:
+        md[EXACT_COVERING_KEY] = COVERING_COL.encode()
+    return md
 
 
 def _wkb_type_codes(arr: pa.Array) -> set[int]:
@@ -165,7 +186,10 @@ def write_geoparquet(
     ``bbox_covering`` (and no ``bbox`` column already in ``df``) the
     covering struct is computed in that same pass from each batch's
     geometry buffers and appended as the last column: the write has one
-    Python hop and no ``ArrowEvalPython`` stage.
+    Python hop and no ``ArrowEvalPython`` stage. Such a covering is the
+    exact envelope, so every part file (the schema-only one of an empty
+    write too) also carries ``EXACT_COVERING_KEY``; a ``bbox`` column
+    the input already had is written as given and the key is not set.
 
     Task-commit protocol (retries/speculation are routine at 100 TB):
     each attempt writes to a hidden temp name derived from
@@ -238,9 +262,9 @@ def write_geoparquet(
         try:
             for batch in buffered:
                 if writer is None:
-                    schema = batch.schema.with_metadata(
-                        {**(batch.schema.metadata or {}), GEO_KEY: meta_json}
-                    )
+                    schema = batch.schema.with_metadata(_footer_metadata(
+                        batch.schema.metadata, meta_json, compute_covering
+                    ))
                     writer = pq.ParquetWriter(tmp, schema)
                 writer.write_batch(batch)
             if writer is not None:
@@ -263,16 +287,15 @@ def write_geoparquet(
             tbl = tbl.append_column(
                 COVERING_COL, _covering_column(tbl.column(geometry_col).combine_chunks())
             )
-        tbl = tbl.replace_schema_metadata(
-            {**(tbl.schema.metadata or {}),
-             GEO_KEY: _geo_metadata_json(
-                 geometry_col, crs, None, [],
-                 extra_cols={
-                     c: _geo_column_entry(crs, None, []) for c in secondary
-                 },
-                 covering=bbox_covering,
-             )}
-        )
+        tbl = tbl.replace_schema_metadata(_footer_metadata(
+            tbl.schema.metadata,
+            _geo_metadata_json(
+                geometry_col, crs, None, [],
+                extra_cols={c: _geo_column_entry(crs, None, []) for c in secondary},
+                covering=bbox_covering,
+            ),
+            compute_covering,
+        ))
         pq.write_table(tbl, os.path.join(path, "part-00000.parquet"))
         return 0
     return sum(r.rows for r in stats)
@@ -287,13 +310,31 @@ def geo_metadata(path: str) -> dict | None:
     (stamped executor-side at write); this merges them into the
     dataset-level extent and type union. Footer reads are KB-sized and
     O(num_files) on the driver — independent of data volume."""
+    return _scan_footers(path)[0]
+
+
+def _scan_footers(path: str) -> tuple[dict | None, dict | None]:
+    """One read of every part-file footer: the merged geo metadata (see
+    ``geo_metadata``), and, if each part file carries
+    ``EXACT_COVERING_KEY`` for ``COVERING_COL``, each file's (size,
+    mtime_ns, primary geometry column, covering column) as stat-ed just
+    before its footer was read (else None)."""
     files = sorted(glob.glob(os.path.join(path, "*.parquet"))) or [path]
     merged: dict | None = None
+    first: dict | None = None
+    exact: dict | None = {}
     for f in files:
+        st = os.stat(f)
         md = pq.ParquetFile(f).schema_arrow.metadata or {}
+        first = md if first is None else first
         if GEO_KEY not in md:
+            exact = None
             break
         doc = json.loads(md[GEO_KEY].decode("utf-8"))
+        if exact is not None and md.get(EXACT_COVERING_KEY) == COVERING_COL.encode():
+            exact[f] = (st.st_size, st.st_mtime_ns, doc["primary_column"], COVERING_COL)
+        else:
+            exact = None
         if merged is None:
             merged = doc
             continue
@@ -312,25 +353,24 @@ def geo_metadata(path: str) -> dict | None:
             elif bb:
                 a["bbox"] = bb
     if merged is not None:
-        return merged
-    md = pq.ParquetFile(files[0]).schema_arrow.metadata or {}
-    if LEGACY_KEY in md:
-        legacy = json.loads(md[LEGACY_KEY].decode("utf-8"))
+        return merged, exact
+    if LEGACY_KEY in first:
+        legacy = json.loads(first[LEGACY_KEY].decode("utf-8"))
         if isinstance(legacy, list) and legacy:
-            first = legacy[0]
-            name = first.get("field_name", "geometry")
+            entry = legacy[0]
+            name = entry.get("field_name", "geometry")
             return {
                 "version": "legacy",
                 "primary_column": name,
                 "columns": {
                     name: {
-                        "encoding": first.get("geometry_format", "wkb").upper(),
+                        "encoding": entry.get("geometry_format", "wkb").upper(),
                         "geometry_types": [],
-                        "crs": first.get("crs"),
+                        "crs": entry.get("crs"),
                     }
                 },
-            }
-    return None
+            }, None
+    return None, None
 
 
 def read_geoparquet(spark: SparkSession, path: str) -> DataFrame:
@@ -338,21 +378,36 @@ def read_geoparquet(spark: SparkSession, path: str) -> DataFrame:
     intact); geo footer metadata (one driver-side footer read) attached
     to the geometry column's schema metadata. WKB stays binary — decode
     is lazy, per-operator (the reference decodes every row up front,
-    geoparquet/__init__.py:60≈ — the 100 TB anti-pattern)."""
+    geoparquet/__init__.py:60≈ — the 100 TB anti-pattern).
+
+    When every part file carries ``EXACT_COVERING_KEY`` (read in the same
+    footer pass), the files are recorded as vouched (``covering.mint``)
+    and the primary geometry column and the ``bbox`` column both get one
+    fresh token under ``covering.TOKEN_KEY`` in their field metadata:
+    ``spatial_window_filter`` and ``geo_sql`` then drop the per-row
+    envelope refine (see ``geo.covering`` for when)."""
     df = spark.read.parquet(path)
-    meta = geo_metadata(path)
-    if meta is not None:
-        # Attach metadata to EVERY geometry column the footer declares
-        # (multi-geometry files are spec-legal; primary_column marks the
-        # default one). The primary keeps an extra marker so consumers
-        # can find it without re-reading footers.
-        for cname, entry in meta["columns"].items():
-            if cname in df.columns:
-                df = df.withMetadata(
-                    cname,
-                    {
-                        "geo": entry,
-                        "geo_primary": cname == meta["primary_column"],
-                    },
-                )
-    return df
+    meta, exact_files = _scan_footers(path)
+    if meta is None:
+        return df
+    # Attach metadata to EVERY geometry column the footer declares
+    # (multi-geometry files are spec-legal; primary_column marks the
+    # default one). The primary keeps an extra marker so consumers can
+    # find it without re-reading footers.
+    primary = meta["primary_column"]
+    md = {
+        cname: {"geo": entry, "geo_primary": cname == primary}
+        for cname, entry in meta["columns"].items()
+        if cname in df.columns
+    }
+    if exact_files and primary in md and COVERING_COL in df.columns:
+        token = covering.mint(exact_files)
+        md[primary][covering.TOKEN_KEY] = token
+        md[COVERING_COL] = {covering.TOKEN_KEY: token}
+    # Through the JVM directly: pyspark's withMetadata resolves the
+    # Metadata class package by package on every call.
+    metadata = getattr(spark._jvm, "org.apache.spark.sql.types.Metadata")
+    jdf = df._jdf
+    for cname, m in md.items():
+        jdf = jdf.withMetadata(cname, metadata.fromJson(json.dumps(m)))
+    return DataFrame(jdf, spark)

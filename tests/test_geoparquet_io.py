@@ -12,6 +12,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from geoparquet_python_spark.geo import covering
 from geoparquet_python_spark.geo import io as gio
 from geoparquet_python_spark.geo import wkb
 from geoparquet_python_spark.geo.functions import st_point
@@ -481,3 +482,336 @@ def test_vectorized_read_udfs_keep_row_semantics(spark):
     ).collect()
     assert rows[0].hit is None and rows[0].a is None
     assert (rows[1].hit, rows[1].a) == (True, 0.0)
+
+
+# ------------------------------------------- exact covering: refine skip
+
+_SKIP_WIN = (-1.0, -3.0, 2.0, 3.5)
+_FAR = wkb.encode(("Point", (500.0, 500.0)))
+
+
+def _skip_lake_df(spark):
+    """Points, polygons and multi-part geometries, plus NULL, EMPTY, an
+    all-NaN point and a point with one NaN coordinate (``wkb.bounds``
+    skips NaN coordinates: its envelope is (inf, 3, -inf, 3), which a
+    NOT-wrapped atom tells apart from a NULL covering)."""
+    sq = [(0.0, 0.0), (4.0, 0.0), (4.0, 4.0), (0.0, 4.0), (0.0, 0.0)]
+    far_sq = [(50.0, 50.0), (51.0, 50.0), (51.0, 51.0), (50.0, 50.0)]
+    near_sq = [(-50.0, -50.0), (-49.0, -50.0), (-49.0, -49.0), (-50.0, -50.0)]
+    geoms = [
+        wkb.encode(("Point", (1.5, -2.0))),
+        wkb.encode(("Point", (30.0, 30.0))),
+        wkb.encode(("Polygon", [sq])),
+        wkb.encode(("LineString", [(-3.0, 1.0), (7.0, 2.0)])),
+        wkb.encode(("MultiPoint", [(9.0, 9.0), (-9.0, 8.0)])),
+        wkb.encode(("MultiPolygon", [[far_sq], [near_sq]])),
+        wkb.encode(("LineString", [])),
+        wkb.encode(("Point", (float("nan"), float("nan")))),
+        wkb.encode(("Point", (float("nan"), 3.0))),
+        None,
+    ]
+    rows = [
+        (i, None if geoms[i % len(geoms)] is None else bytearray(geoms[i % len(geoms)]))
+        for i in range(50)
+    ]
+    return spark.createDataFrame(rows, "id long, geometry binary").repartition(3)
+
+
+def _truth(df, win, bbox=True):
+    """Ids whose geometry's envelope meets ``win`` (and, with ``bbox``,
+    whose covering box does), from ``wkb.bounds`` on the driver."""
+    rows = df.select("id", "geometry", *(["bbox"] if bbox else [])).collect()
+    env = wkb.bounds(pa.array([None if r.geometry is None else bytes(r.geometry)
+                               for r in rows], pa.binary()))
+    x0, y0, x1, y1 = win
+    out = []
+    for r, (a, b, c, d) in zip(rows, env):
+        boxes = [(a, b, c, d)] + ([tuple(r.bbox)] if bbox else [])
+        if all(v is not None and bx[0] <= x1 and bx[2] >= x0 and bx[1] <= y1
+               and bx[3] >= y0 for bx in boxes for v in bx):
+            out.append(r.id)
+    return sorted(out)
+
+
+def _ids(df):
+    return sorted(r.id for r in df.select("id").collect())
+
+
+def _udf_nodes(df):
+    return df._jdf.queryExecution().executedPlan().toString().count("ArrowEvalPython")
+
+
+def _swf(df, win=_SKIP_WIN):
+    from geoparquet_python_spark.geo.functions import spatial_window_filter
+
+    return spatial_window_filter(df, win)
+
+
+_SKIP_SQL = [
+    "SELECT id FROM {v} WHERE ST_EnvelopeIntersects(geometry, -1.0, -3.0, 2.0, 3.5)",
+    "SELECT id FROM {v} WHERE NOT ST_EnvelopeIntersects(geometry, -1.0, -3.0, 2.0, 3.5)",
+    "SELECT id, ST_EnvelopeIntersects(geometry, -1.0, -3.0, 2.0, 3.5) AS hit FROM {v}",
+]
+
+
+def _sql_matches_unrewritten(spark, view):
+    """geo_sql returns what the un-rewritten statement returns, in a
+    WHERE, under NOT and as a projected value (NULL included); the
+    number of ArrowEvalPython nodes of the WHERE form is returned."""
+    from geoparquet_python_spark.geo.functions import register_sql
+    from geoparquet_python_spark.geo.sqlrewrite import geo_sql
+
+    register_sql(spark)
+    for sql in _SKIP_SQL:
+        sql = sql.format(v=view)
+        got = sorted(map(tuple, geo_sql(spark, sql).collect()), key=str)
+        want = sorted(map(tuple, spark.sql(sql).collect()), key=str)
+        assert got == want, sql
+    return _udf_nodes(geo_sql(spark, _SKIP_SQL[0].format(v=view)))
+
+
+def test_exact_lake_skips_the_refine_on_both_paths(spark, tmp_path):
+    """A lake whose covering this writer computed: the footer key is on
+    every part file, both columns carry one token, and both read paths
+    drop the refine (no ArrowEvalPython at all) yet return exactly the
+    refine path's rows, with the stripped-tag refine and the
+    un-rewritten SQL as references."""
+    out = str(tmp_path / "exact")
+    df = _skip_lake_df(spark)
+    gio.write_geoparquet(df, out)
+    files = sorted(p for p in (tmp_path / "exact").glob("*.parquet"))
+    assert len(files) == 3
+    for f in files:
+        md = pq.ParquetFile(f).schema_arrow.metadata
+        assert md[gio.EXACT_COVERING_KEY] == b"bbox"
+        assert b"exact" not in md[gio.GEO_KEY]  # the spec doc is unchanged
+    lake = gio.read_geoparquet(spark, out)
+    fields = {f.name: f.metadata for f in lake.schema.fields}
+    token = fields["geometry"][covering.TOKEN_KEY]
+    assert fields["bbox"] == {covering.TOKEN_KEY: token}
+    assert covering.is_exact(lake, "geometry", "bbox")
+
+    q = _swf(lake)
+    assert _udf_nodes(q) == 0
+    want = _truth(lake, _SKIP_WIN)
+    assert want and _ids(q) == want
+    assert _ids(_swf(lake.withMetadata("bbox", {}))) == want  # forced refine
+    lake.createOrReplaceTempView("skip_exact_lake")
+    assert _sql_matches_unrewritten(spark, "skip_exact_lake") == 0
+
+    # the schema-only part of an empty write carries the key too
+    empty = str(tmp_path / "empty")
+    gio.write_geoparquet(df.where(F.lit(False)), empty)
+    md = pq.ParquetFile(f"{empty}/part-00000.parquet").schema_arrow.metadata
+    assert md[gio.EXACT_COVERING_KEY] == b"bbox"
+
+
+def _wide(df):
+    """``df`` with a deliberately over-approximating covering column."""
+    return df.withColumn("bbox", F.struct(*(
+        F.lit(v).alias(n) for n, v in zip(
+            ("xmin", "ymin", "xmax", "ymax"), (-1e3, -1e3, 1e3, 1e3)))))
+
+
+def _assert_refine_kept(spark, df, want, view=None):
+    """Both paths keep a UDF node and return ``want``: the rows whose
+    covering box and geometry envelope both meet the window (the SQL
+    rewrite's covering conjuncts apply even where the box is no
+    covering of the row's geometry)."""
+    from geoparquet_python_spark.geo.sqlrewrite import geo_sql
+
+    q = _swf(df)
+    assert _udf_nodes(q) >= 1
+    assert _ids(q) == want
+    if view is not None:
+        df.createOrReplaceTempView(view)
+        q = geo_sql(spark, _SKIP_SQL[0].format(v=view))
+        assert _udf_nodes(q) >= 1
+        assert _ids(q) == want
+
+
+def test_inexact_coverings_keep_the_refine(spark, tmp_path):
+    """Every frame the writer's key or the read's token cannot vouch for
+    keeps the refine and stays exact: a covering the input brought, no
+    covering, one part file without the key, a column replaced after
+    the read, two lakes' columns side by side (joined, or one lake
+    joined to itself), a union with a wider box, and a Spark-written
+    copy whose files still carry the token in Spark's own schema."""
+    base = _skip_lake_df(spark)
+
+    given = str(tmp_path / "given")
+    gio.write_geoparquet(_wide(base), given)
+    lake = gio.read_geoparquet(spark, given)
+    assert gio.EXACT_COVERING_KEY not in pq.ParquetFile(
+        f"{given}/part-00000.parquet").schema_arrow.metadata
+    _assert_refine_kept(spark, lake, _truth(lake, _SKIP_WIN), "skip_given")
+
+    bare = str(tmp_path / "bare")
+    gio.write_geoparquet(base, bare, bbox_covering=False)
+    lake = gio.read_geoparquet(spark, bare)
+    assert gio.EXACT_COVERING_KEY not in pq.ParquetFile(
+        f"{bare}/part-00000.parquet").schema_arrow.metadata
+    _assert_refine_kept(spark, lake, _truth(lake, _SKIP_WIN, bbox=False))
+
+    mixed = str(tmp_path / "mixed")
+    gio.write_geoparquet(base, mixed)
+    part = f"{mixed}/part-00001.parquet"
+    tbl = pq.read_table(part)
+    wide = pa.array([{"xmin": -1e3, "ymin": -1e3, "xmax": 1e3, "ymax": 1e3}] * len(tbl),
+                    tbl.schema.field("bbox").type)
+    tbl = tbl.set_column(tbl.schema.get_field_index("bbox"), "bbox", wide)
+    md = dict(tbl.schema.metadata)
+    del md[gio.EXACT_COVERING_KEY]
+    pq.write_table(tbl.replace_schema_metadata(md), part)
+    lake = gio.read_geoparquet(spark, mixed)
+    _assert_refine_kept(spark, lake, _truth(lake, _SKIP_WIN), "skip_mixed")
+
+    exact = str(tmp_path / "exact")
+    gio.write_geoparquet(base, exact)
+    lake = gio.read_geoparquet(spark, exact)
+    wide_box = _wide(lake)
+    _assert_refine_kept(spark, wide_box, _truth(wide_box, _SKIP_WIN), "skip_wide_box")
+    moved = lake.withColumn(
+        "geometry",
+        F.when(F.col("id") % 2 == 0, F.lit(_FAR)).otherwise(F.col("geometry")),
+    )
+    _assert_refine_kept(spark, moved, _truth(moved, _SKIP_WIN), "skip_moved")
+
+    other = str(tmp_path / "other")
+    gio.write_geoparquet(
+        base.withColumn("geometry", F.when(F.col("id") % 3 == 0, F.lit(_FAR))
+                        .otherwise(F.col("geometry"))),
+        other,
+    )
+    b = gio.read_geoparquet(spark, other)
+    swapped = lake.drop("geometry").join(b.select("id", "geometry"), "id")
+    _assert_refine_kept(spark, swapped, _truth(swapped, _SKIP_WIN), "skip_swapped")
+    shifted = lake.select((F.col("id") + 1).alias("id"), "geometry")
+    self_swap = lake.drop("geometry").join(shifted, "id")
+    union = lake.unionByName(_wide(lake).withColumn("id", F.col("id") + 1000))
+    for frame in (self_swap, union):  # one read's token on both columns
+        tokens = {f.name: f.metadata.get(covering.TOKEN_KEY) for f in frame.schema.fields}
+        assert tokens["geometry"] is not None and tokens["geometry"] == tokens["bbox"]
+    _assert_refine_kept(spark, self_swap, _truth(self_swap, _SKIP_WIN), "skip_self_swap")
+    _assert_refine_kept(spark, union, _truth(union, _SKIP_WIN), "skip_union")
+    copy = str(tmp_path / "copy")
+    union.write.parquet(copy)
+    reread = spark.read.parquet(copy)
+    fields = {f.name: f.metadata for f in reread.schema.fields}
+    assert fields["bbox"] == {covering.TOKEN_KEY: fields["geometry"][covering.TOKEN_KEY]}
+    _assert_refine_kept(spark, reread, _truth(reread, _SKIP_WIN), "skip_copy")
+
+
+def test_geo_sql_keeps_atoms_it_cannot_resolve(spark, tmp_path):
+    """On an exact lake the unqualified atom is dropped, also under a
+    derived table, an aggregate or a same-name column-alias list. A
+    qualified geometry name, a CTE, a name the statement redefines (by
+    an alias or a generator), a join (comma, self or of two lakes, also inside a derived table that
+    takes one row's geometry and another row's box, or another lake's
+    geometry) or an unknown relation keeps the UDF atom and its rows."""
+    from pyspark.errors import AnalysisException
+
+    from geoparquet_python_spark.geo.functions import register_sql
+    from geoparquet_python_spark.geo.sqlrewrite import geo_sql, rewrite_spatial_sql
+
+    base = _skip_lake_df(spark)
+    out = str(tmp_path / "exact")
+    gio.write_geoparquet(base, out)
+    lake = gio.read_geoparquet(spark, out)
+    lake.createOrReplaceTempView("skip_sql_lake")
+    other = str(tmp_path / "other")
+    gio.write_geoparquet(
+        base.withColumn("geometry", F.when(F.col("id") % 3 == 0, F.lit(_FAR))
+                        .otherwise(F.col("geometry"))),
+        other,
+    )
+    gio.read_geoparquet(spark, other).createOrReplaceTempView("skip_sql_other")
+    _wide(lake).select(F.col("id").alias("cid"), "bbox").createOrReplaceTempView(
+        "skip_sql_coarse")
+    register_sql(spark)
+    atom = "ST_EnvelopeIntersects({g}, -1.0, -3.0, 2.0, 3.5)".format
+    want = _truth(lake, _SKIP_WIN)
+    for sql in [
+        f"SELECT id FROM skip_sql_lake WHERE {atom(g='geometry')}",
+        f"SELECT id FROM (SELECT id, geometry, bbox FROM skip_sql_lake) "
+        f"WHERE {atom(g='geometry')}",
+        f"SELECT id FROM skip_sql_lake t(id, geometry, bbox) WHERE {atom(g='geometry')}",
+        f"SELECT id FROM skip_sql_lake WHERE {atom(g='geometry')} GROUP BY id",
+    ]:
+        q = geo_sql(spark, sql)
+        assert _udf_nodes(q) == 0, sql
+        assert _ids(q) == want, sql
+
+    def inner(sql):  # the rows a derived table hands to the atom
+        return _truth(spark.sql(sql), _SKIP_WIN)
+
+    self_join = ("SELECT a.id, a.geometry, b.bbox FROM skip_sql_lake a "
+                 "JOIN skip_sql_lake b ON a.id = b.id + 1")
+    two_lakes = ("SELECT a.id, b.geometry, a.bbox FROM skip_sql_lake a "
+                 "JOIN skip_sql_other b USING (id)")
+    far = _truth(lake.withColumn("geometry", F.lit(_FAR)), _SKIP_WIN)
+    assert far == [] and want  # the atom decides these rows, not the box
+    for sql, rows in [
+        (f"SELECT t.id FROM skip_sql_lake t WHERE {atom(g='t.geometry')}", want),
+        (f"WITH c AS (SELECT * FROM skip_sql_lake) SELECT id FROM c "
+         f"WHERE {atom(g='geometry')}", want),
+        ("SELECT id FROM (SELECT id, bbox, ST_Point(500.0D, 500.0D) AS geometry "
+         f"FROM skip_sql_lake) WHERE {atom(g='geometry')}", far),
+        ("SELECT t.id FROM (SELECT id, geometry FROM skip_sql_lake) t, skip_sql_coarse c "
+         f"WHERE t.id = c.cid AND {atom(g='geometry')}", _truth(lake, _SKIP_WIN, bbox=False)),
+        ("SELECT id FROM (SELECT l.id, l.bbox, t.geometry FROM skip_sql_lake l "
+         "LATERAL VIEW explode(array(ST_Point(500.0D, 500.0D))) t AS geometry) "
+         f"WHERE {atom(g='geometry')}", far),
+        (f"SELECT id FROM ({self_join}) WHERE {atom(g='geometry')}", inner(self_join)),
+        (f"SELECT id FROM ({two_lakes}) WHERE {atom(g='geometry')}", inner(two_lakes)),
+    ]:
+        q = geo_sql(spark, sql)
+        assert _udf_nodes(q) >= 1, sql
+        assert _ids(q) == rows, sql
+    for join in (self_join, two_lakes):  # dropping the atom there would be wrong
+        sql = f"SELECT id FROM ({join}) WHERE {atom(g='geometry')}"
+        dropped = spark.sql(rewrite_spatial_sql(sql, exact=frozenset({"geometry"})))
+        assert _ids(dropped) != inner(join)
+    with pytest.raises(AnalysisException):
+        geo_sql(spark, f"SELECT id FROM no_such_view WHERE {atom(g='geometry')}")
+    with pytest.raises(AnalysisException):  # the name is not visible there
+        geo_sql(spark, "SELECT id FROM (SELECT id, bbox FROM skip_sql_lake) "
+                f"WHERE {atom(g='geometry')}")
+
+
+def test_lake_rewritten_in_place_keeps_the_refine(spark, tmp_path):
+    """A frame and a view read before the lake's files were rewritten
+    in place (same file names, now with an over-approximating given
+    covering) no longer skip the refine: the vouched files changed."""
+    from geoparquet_python_spark.geo.sqlrewrite import geo_sql
+
+    out = str(tmp_path / "lake")
+    base = _skip_lake_df(spark)
+    gio.write_geoparquet(base, out)
+    lake = gio.read_geoparquet(spark, out)
+    lake.createOrReplaceTempView("skip_rewritten")
+    assert covering.is_exact(lake, "geometry", "bbox")
+    names = sorted(p.name for p in (tmp_path / "lake").glob("*.parquet"))
+    gio.write_geoparquet(_wide(base), out)
+    assert sorted(p.name for p in (tmp_path / "lake").glob("*.parquet")) == names
+    assert not covering.is_exact(lake, "geometry", "bbox")
+    assert _udf_nodes(_swf(lake)) >= 1
+    assert _udf_nodes(geo_sql(spark, _SKIP_SQL[0].format(v="skip_rewritten"))) >= 1
+    fresh = gio.read_geoparquet(spark, out)
+    assert _ids(_swf(fresh)) == _truth(fresh, _SKIP_WIN)
+
+
+def test_rewrite_with_exact_identifiers_drops_only_their_atoms():
+    """Text-level: the default (no exact identifiers) output is the plain
+    rewrite; an exact identifier's atom becomes the covering conjuncts
+    alone, other atoms keep the UDF."""
+    from geoparquet_python_spark.geo.sqlrewrite import rewrite_spatial_sql
+
+    sql = ("SELECT * FROM t WHERE ST_EnvelopeIntersects(g, 0, 0, 1, 1) "
+           "OR ST_EnvelopeIntersects(h, 0, 0, 1, 1)")
+    assert rewrite_spatial_sql(sql, exact=frozenset()) == rewrite_spatial_sql(sql)
+    out = rewrite_spatial_sql(sql, exact=frozenset({"g"}))
+    assert "ST_EnvelopeIntersects(g" not in out
+    assert out.count("ST_EnvelopeIntersects(h, 0, 0, 1, 1)") == 1
+    assert ("WHERE (bbox.xmin <= 1 AND bbox.xmax >= 0 AND bbox.ymin <= 1 AND "
+            "bbox.ymax >= 0 AND (g IS NULL OR TRUE)) OR (bbox.xmin <= 1") in out

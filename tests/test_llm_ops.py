@@ -2439,6 +2439,83 @@ def test_build_concurrently_raises_lowest_index_failure(spark):
     assert len(notes) == 1 and "thunk 2" in notes[0] and "leg two" in notes[0]
 
 
+def test_prepare_serializes_concurrent_callers():
+    """Two driver threads in session.prepare(): the check-then-set of
+    the shuffle partition count runs once per caller without
+    interleaving, so the second caller sees the first one's value and
+    sets nothing. Pure-Python: a fake session records overlapping conf
+    calls."""
+    import threading
+    import time
+    from types import SimpleNamespace
+
+    from geoparquet_python_spark.session import prepare
+
+    class Conf:
+        def __init__(self):
+            self.vals = {"spark.sql.shuffle.partitions": "200"}
+            self.inside = self.peak = 0
+            self.partition_sets = 0
+            self.lock = threading.Lock()
+
+        def _visit(self):
+            with self.lock:
+                self.inside += 1
+                self.peak = max(self.peak, self.inside)
+            time.sleep(0.005)
+            with self.lock:
+                self.inside -= 1
+
+        def get(self, k):
+            self._visit()
+            return self.vals[k]
+
+        def set(self, k, v):
+            self._visit()
+            self.partition_sets += k == "spark.sql.shuffle.partitions"
+            self.vals[k] = v
+
+    conf = Conf()
+    fake = SimpleNamespace(conf=conf, sparkContext=SimpleNamespace(defaultParallelism=4))
+    threads = [threading.Thread(target=prepare, args=(fake,)) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert conf.peak == 1
+    assert conf.partition_sets == 1
+    assert conf.vals["spark.sql.shuffle.partitions"] == "16"
+
+
+def test_checkpoint_appended_during_sweep_survives(monkeypatch):
+    """release_dead_checkpoints and materialize share one lock: an entry
+    materialize() appends from another thread after the sweep has read
+    the registry but before it writes back the survivors is kept, not
+    lost to that write. Pure-Python: fake frames stand in for
+    checkpoints, and the registry starts the other thread the moment
+    the sweep's pass over it ends."""
+    import threading
+    from unittest import mock
+
+    from geoparquet_python_spark.functions import exact
+
+    late = mock.MagicMock()  # materialize(late) registers late.localCheckpoint()
+    racer = threading.Thread(target=exact.materialize, args=(late,))
+
+    class Registry(list):
+        def __iter__(self):
+            yield from list(super().__iter__())
+            if racer.ident is None:
+                racer.start()
+                racer.join(0.2)  # as far as it gets before the write-back
+
+    monkeypatch.setattr(exact, "_LIVE_CHECKPOINTS", Registry([(lambda: None, mock.MagicMock())]))
+    assert exact.release_dead_checkpoints() == 1
+    racer.join()
+    kept = [ref() for ref, _ in exact._LIVE_CHECKPOINTS]
+    assert kept == [late.localCheckpoint.return_value]
+
+
 def test_sig_bitcount_kernel_tolerates_empty_batches():
     """ADVICE r12: MapInBatch paths may hand the kernel a zero-row
     Arrow batch under future Spark versions; it must skip it instead of

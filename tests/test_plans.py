@@ -521,35 +521,24 @@ def test_geoparquet_write_has_no_arrow_eval_python(spark, tmp_path, monkeypatch)
     assert "ArrowEvalPython" not in plan, plan
 
 
-@pytest.mark.parametrize("path", ["spatial_window_filter", "geo_sql"])
-def test_geo_read_covering_filter_below_udf(spark, tmp_path, path):
-    """Both read paths evaluate the envelope UDF only on coarse
-    survivors: the covering-column Filter sits below (runs before) the
-    first ArrowEvalPython, and the scan pushes all four bbox bounds."""
-    import re
-
-    from geoparquet_python_spark.geo import io as gio
-    from geoparquet_python_spark.geo.functions import spatial_window_filter
+def _geo_read(spark, lake, path, view, select="id"):
+    from geoparquet_python_spark.geo.functions import register_sql, spatial_window_filter
     from geoparquet_python_spark.geo.sqlrewrite import geo_sql
 
-    out = str(tmp_path / "lake")
-    gio.write_geoparquet(_geo_frame(spark), out)
-    lake = gio.read_geoparquet(spark, out)
+    register_sql(spark)
     if path == "spatial_window_filter":
-        q = spatial_window_filter(lake, _WINDOW)
-    else:
-        lake.createOrReplaceTempView("plan_guard_lake")
-        q = geo_sql(
-            spark,
-            "SELECT id FROM plan_guard_lake WHERE ST_EnvelopeIntersects("
-            "geometry, 10.0, 5.0, 50.0, 20.0)",
-        )
-    plan = _full_plan(spark, q)
-    udf_at = plan.index("ArrowEvalPython")
-    m = re.search(r"Filter \([^\n]*bbox#\d+\.xmin <= 50\.0", plan)
-    assert m, "covering-column filter missing:\n" + plan
-    assert m.start() > udf_at, "covering filter runs above the UDF:\n" + plan
-    assert "ArrowEvalPython" not in plan[m.start():], plan
+        return spatial_window_filter(lake, _WINDOW).selectExpr(*select.split(", "))
+    lake.createOrReplaceTempView(view)
+    return geo_sql(
+        spark,
+        f"SELECT {select} FROM {view} WHERE ST_EnvelopeIntersects("
+        "geometry, 10.0, 5.0, 50.0, 20.0)",
+    )
+
+
+def _assert_bounds_pushed(plan):
+    import re
+
     pushed = re.search(r"PushedFilters: \[([^\]]*)\]", plan).group(1)
     for bound in (
         "LessThanOrEqual(bbox.xmin,50.0)",
@@ -558,4 +547,52 @@ def test_geo_read_covering_filter_below_udf(spark, tmp_path, path):
         "GreaterThanOrEqual(bbox.ymax,5.0)",
     ):
         assert bound in pushed, f"{bound} not pushed: {pushed}"
+
+
+@pytest.mark.parametrize("path", ["spatial_window_filter", "geo_sql"])
+def test_geo_read_covering_filter_below_udf(spark, tmp_path, path):
+    """On a lake whose covering is given (so not known to be exact),
+    both read paths evaluate the envelope UDF only on coarse survivors:
+    the covering-column Filter sits below (runs before) the first
+    ArrowEvalPython, and the scan pushes all four bbox bounds."""
+    import re
+
+    from geoparquet_python_spark.geo import io as gio
+
+    out = str(tmp_path / "lake")
+    gio.write_geoparquet(gio.add_bbox_column(_geo_frame(spark)), out)
+    lake = gio.read_geoparquet(spark, out)
+    q = _geo_read(spark, lake, path, "plan_guard_lake")
+    plan = _full_plan(spark, q)
+    udf_at = plan.index("ArrowEvalPython")
+    m = re.search(r"Filter \([^\n]*bbox#\d+\.xmin <= 50\.0", plan)
+    assert m, "covering-column filter missing:\n" + plan
+    assert m.start() > udf_at, "covering filter runs above the UDF:\n" + plan
+    assert "ArrowEvalPython" not in plan[m.start():], plan
+    _assert_bounds_pushed(plan)
     assert q.count() == 31
+
+
+@pytest.mark.parametrize("path", ["spatial_window_filter", "geo_sql"])
+def test_geo_read_exact_covering_plans_no_refine(spark, tmp_path, path):
+    """On a lake whose covering the writer computed (the exact
+    envelope), the refine is not planned: a filter-only read has no
+    ArrowEvalPython and still pushes all four bbox bounds, and the
+    benchmark-shaped read (filter, then st_envelope and st_area) plans
+    exactly one."""
+    from geoparquet_python_spark.geo import io as gio
+
+    out = str(tmp_path / "lake")
+    gio.write_geoparquet(_geo_frame(spark), out)
+    lake = gio.read_geoparquet(spark, out)
+    q = _geo_read(spark, lake, path, "plan_guard_exact_lake")
+    plan = _full_plan(spark, q)
+    assert "ArrowEvalPython" not in plan, plan
+    _assert_bounds_pushed(plan)
+    assert q.count() == 31
+    bench = _geo_read(
+        spark, lake, path, "plan_guard_exact_lake",
+        select="ST_Envelope(geometry) AS e, ST_Area(geometry) AS a",
+    )
+    assert _full_plan(spark, bench).count("ArrowEvalPython") == 1
+    assert bench.count() == 31

@@ -5,7 +5,7 @@ its own geometry buffers (``wkb.bounds``), so on a lake that writer
 built the covering IS the float64 envelope of the primary geometry
 (null fields for a null geometry), and it says so with a footer key.
 The covering-column conjuncts then say exactly what the per-row
-envelope refine says, and the refine (one pandas-UDF stage per read)
+envelope refine says, and the refine (one Arrow-UDF stage per read)
 can be dropped.
 
 That is only true while a query compares one row's geometry with the

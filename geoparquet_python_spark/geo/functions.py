@@ -7,26 +7,27 @@ Split by execution tier, fastest first:
   whole-stage-codegen, usable in pushdown-able predicates. The
   reference computed these shapely-side per row
   (geoparquet/__init__.py:60≈ decodes everything eagerly first).
-* Arrow-vectorized pandas UDFs over the numpy WKB codec
-  (geoparquet_python_spark.geo.wkb) for anything that must touch
-  coordinates of arbitrary geometries. One Python hop per Arrow batch,
-  never per row.
+* Arrow UDFs (``arrow_udf``: ``pa.Array`` in, ``pa.Array`` out) over
+  the numpy WKB codec (geoparquet_python_spark.geo.wkb) for anything
+  that must touch coordinates of arbitrary geometries. One Python hop
+  per Arrow batch, never per row; the columnar kernels read the
+  batch's WKB buffers in place.
 
-``register_sql(spark)`` exposes every UDF to SQL-string users.
+``register_sql(spark)`` exposes every UDF to SQL-string users, once
+per session.
 """
 
 from __future__ import annotations
 
 import math
+import weakref
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-import pyarrow.compute as pc
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
@@ -58,10 +59,6 @@ def haversine_km(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Colu
     return F.lit(2.0 * EARTH_RADIUS_KM) * F.atan2(F.sqrt(a), F.sqrt(1 - a))
 
 
-def planar_distance(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
-    return F.sqrt(F.pow(x2 - x1, 2) + F.pow(y2 - y1, 2))
-
-
 _WEB_MERCATOR_R = 6378137.0
 
 
@@ -76,22 +73,6 @@ def mercator_y(lat: Column) -> Column:
     )
 
 
-def bbox_intersects(a: Column, b: Column) -> Column:
-    """Plain conjuncts over two {xmin,ymin,xmax,ymax} structs — the
-    spatial-pushdown prefilter (SURVEY.md §4.3): comparisons on struct
-    fields reach the Parquet row-group stats."""
-    return (
-        (a["xmin"] <= b["xmax"])
-        & (a["xmax"] >= b["xmin"])
-        & (a["ymin"] <= b["ymax"])
-        & (a["ymax"] >= b["ymin"])
-    )
-
-
-def bbox_contains_point(b: Column, x: Column, y: Column) -> Column:
-    return (b["xmin"] <= x) & (x <= b["xmax"]) & (b["ymin"] <= y) & (y <= b["ymax"])
-
-
 def spatial_window_filter(
     df,
     window: tuple[float, float, float, float],
@@ -103,7 +84,7 @@ def spatial_window_filter(
     Catalyst rule needed): ``ST_Intersects(geom, window)`` becomes plain
     bbox-field comparisons — which Spark pushes to Parquet row-group
     stats when ``bbox_col`` is a materialized covering column — plus an
-    exact per-geometry envelope refine (a pandas-UDF stage) for rows
+    exact per-geometry envelope refine (an Arrow-UDF stage) for rows
     whose covering box over-approximates the envelope.
 
     A lake written by ``write_geoparquet`` with a computed covering
@@ -118,60 +99,72 @@ def spatial_window_filter(
 
     window = (xmin, ymin, xmax, ymax)."""
     x0, y0, x1, y1 = window
+
+    def overlaps(b: Column) -> Column:  # box struct b meets the window
+        return (b["xmin"] <= x1) & (b["xmax"] >= x0) & (b["ymin"] <= y1) & (b["ymax"] >= y0)
+
     if bbox_col in df.columns:
         skip_refine = not exact or covering.is_exact(df, geometry_col, bbox_col)
-        b = F.col(bbox_col)
-        coarse = (
-            (b["xmin"] <= x1)
-            & (b["xmax"] >= x0)
-            & (b["ymin"] <= y1)
-            & (b["ymax"] >= y0)
-        )
-        df = df.where(coarse)  # pushdown-able: plain struct-field compares
+        # pushdown-able: plain struct-field compares
+        df = df.where(overlaps(F.col(bbox_col)))
         if skip_refine:
             return df
-    env = st_envelope(F.col(geometry_col))
-    fine = (
-        (env["xmin"] <= x1)
-        & (env["xmax"] >= x0)
-        & (env["ymin"] <= y1)
-        & (env["ymax"] >= y0)
+    return df.where(overlaps(st_envelope(F.col(geometry_col))))
+
+
+# ------------------------------------------------------------- Arrow UDFs
+
+
+def _per_row(fn, out_type: pa.DataType, g: pa.Array, *args: pa.Array) -> pa.Array:
+    """``fn(wkb_bytes, *row_args)`` for each row whose geometry is not
+    NULL, NULL for the others; a NaN double result is NULL too."""
+    cols = [a.to_pylist() for a in (g, *args)]
+    return pa.array(
+        [None if r[0] is None else fn(*r) for r in zip(*cols)],
+        out_type,
+        from_pandas=True,
     )
-    return df.where(fine)
 
 
-# ------------------------------------------------------------ pandas UDFs
-
-
-@pandas_udf(BinaryType())
-def st_point(x: pd.Series, y: pd.Series) -> pd.Series:
+@arrow_udf(BinaryType())
+def st_point(x: pa.Array, y: pa.Array) -> pa.Array:
     """ST_Point(x, y) -> WKB (D2); vectorized single-buffer encoder."""
-    return pd.Series(wkb.encode_points(x.to_numpy("f8"), y.to_numpy("f8")))
+    return pa.array(
+        wkb.encode_points(np.asarray(x, "f8"), np.asarray(y, "f8")), pa.binary()
+    )
 
 
-@pandas_udf(DoubleType())
-def st_x(g: pd.Series) -> pd.Series:
-    xs, _ = wkb.decode_points(g)
-    return pd.Series(xs)
+@arrow_udf(DoubleType())
+def st_x(g: pa.Array) -> pa.Array:
+    xs, _ = wkb.decode_points(g.to_pylist())
+    return pa.array(xs, from_pandas=True)
 
 
-@pandas_udf(DoubleType())
-def st_y(g: pd.Series) -> pd.Series:
-    _, ys = wkb.decode_points(g)
-    return pd.Series(ys)
+@arrow_udf(DoubleType())
+def st_y(g: pa.Array) -> pa.Array:
+    _, ys = wkb.decode_points(g.to_pylist())
+    return pa.array(ys, from_pandas=True)
 
 
-@pandas_udf(_BBOX_TYPE)
-def st_envelope(g: pd.Series) -> pd.DataFrame:
-    """Bounding box struct (D4) — also the GeoParquet-1.1 covering
-    column. One columnar ``wkb.bounds`` call per Arrow batch."""
-    return pd.DataFrame(wkb.bounds(pa.array(g, pa.binary())), columns=BBOX_FIELDS)
+def envelope(g: pa.Array) -> pa.Array:
+    """Bounding-box struct of each WKB row, from one columnar
+    ``wkb.bounds`` call: the ``st_envelope`` body (D4) and the covering
+    column ``write_geoparquet`` computes in its own pass. A NULL
+    geometry gives a struct of NULL fields."""
+    b = wkb.bounds(g)
+    return pa.StructArray.from_arrays(
+        [pa.array(b[:, i], pa.float64(), from_pandas=True) for i in range(4)],
+        names=BBOX_FIELDS,
+    )
 
 
-@pandas_udf(BooleanType())
+st_envelope = arrow_udf(envelope, _BBOX_TYPE)
+
+
+@arrow_udf(BooleanType())
 def st_envelope_intersects(
-    g: pd.Series, x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series
-) -> pd.Series:
+    g: pa.Array, x0: pa.Array, y0: pa.Array, x1: pa.Array, y1: pa.Array
+) -> pa.Array:
     """ST_EnvelopeIntersects(geom, x0, y0, x1, y1): does the geometry's
     envelope overlap the window? The exact per-row refine behind the
     SQL-string pushdown rewrite (geo/sqlrewrite.py) — same predicate
@@ -179,102 +172,88 @@ def st_envelope_intersects(
     bounds compare as doubles (SQL decimal literals included), like the
     covering-column conjuncts the rewrite puts beside it; a NULL
     geometry gives NULL."""
-    b = wkb.bounds(pa.array(g, pa.binary()))
-    wx0, wy0, wx1, wy1 = (s.to_numpy("f8") for s in (x0, y0, x1, y1))
+    b = wkb.bounds(g)
+    wx0, wy0, wx1, wy1 = (np.asarray(a, "f8") for a in (x0, y0, x1, y1))
     hit = (b[:, 0] <= wx1) & (b[:, 2] >= wx0) & (b[:, 1] <= wy1) & (b[:, 3] >= wy0)
-    out = pd.Series(hit, dtype="object")
-    out[g.isna().to_numpy()] = None
-    return out
+    return pa.array(hit, mask=g.is_null().to_numpy(zero_copy_only=False))
 
 
-@pandas_udf(DoubleType())
-def st_area(g: pd.Series) -> pd.Series:
+@arrow_udf(DoubleType())
+def st_area(g: pa.Array) -> pa.Array:
     """Planar area. A 21-byte Point row is exactly 0.0 from its type code
     alone; every other non-null row decodes and takes ``wkb.area``."""
-    arr = pa.array(g, pa.binary())
-    point = (wkb.type_codes(arr) == wkb._POINT) & (
-        pc.binary_length(arr).to_numpy(zero_copy_only=False) == 21
-    )
+    _, _, lens, valid = wkb._arrow_views(g)
+    point = (wkb.type_codes(g) == wkb._POINT) & (lens == 21)
     out = np.where(point, 0.0, np.nan)
-    for i in np.flatnonzero(~point & arr.is_valid().to_numpy(zero_copy_only=False)):
-        out[i] = wkb.area(wkb.decode(g.iat[i]))
-    return pd.Series(out)
+    for i in np.flatnonzero(~point & valid):
+        out[i] = wkb.area(wkb.decode(g[i].as_py()))
+    return pa.array(out, from_pandas=True)
 
 
-@pandas_udf(DoubleType())
-def st_length(g: pd.Series) -> pd.Series:
-    return pd.Series(
-        [np.nan if v is None else wkb.length(wkb.decode(v)) for v in g], dtype="f8"
+@arrow_udf(DoubleType())
+def st_length(g: pa.Array) -> pa.Array:
+    return _per_row(lambda v: wkb.length(wkb.decode(v)), pa.float64(), g)
+
+
+@arrow_udf(BinaryType())
+def st_centroid(g: pa.Array) -> pa.Array:
+    return _per_row(
+        lambda v: wkb.encode(("Point", wkb.centroid(wkb.decode(v)))), pa.binary(), g
     )
 
 
-@pandas_udf(BinaryType())
-def st_centroid(g: pd.Series) -> pd.Series:
-    def one(v):
-        if v is None:
-            return None
-        return wkb.encode(("Point", wkb.centroid(wkb.decode(v))))
-
-    return pd.Series([one(v) for v in g])
+@arrow_udf(StringType())
+def st_astext(g: pa.Array) -> pa.Array:
+    return _per_row(lambda v: wkb.to_wkt(wkb.decode(v)), pa.string(), g)
 
 
-@pandas_udf(StringType())
-def st_astext(g: pd.Series) -> pd.Series:
-    return pd.Series([None if v is None else wkb.to_wkt(wkb.decode(v)) for v in g])
-
-
-@pandas_udf(DoubleType())
-def st_distance(a: pd.Series, b: pd.Series) -> pd.Series:
+@arrow_udf(DoubleType())
+def st_distance(a: pa.Array, b: pa.Array) -> pa.Array:
     """Planar point-point distance on WKB columns (D7). General
     geometry-geometry minimum distance is out of reference scope
     (SURVEY.md §2.D)."""
-    ax, ay = wkb.decode_points(a)
-    bx, by = wkb.decode_points(b)
-    return pd.Series(np.hypot(bx - ax, by - ay))
+    ax, ay = wkb.decode_points(a.to_pylist())
+    bx, by = wkb.decode_points(b.to_pylist())
+    return pa.array(np.hypot(bx - ax, by - ay), from_pandas=True)
 
 
-@pandas_udf(BooleanType())
-def st_contains_point(poly: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
-    """ST_Contains(polygon, point) via ray-cast (D8). Decodes each
-    distinct polygon once per batch — the common shape is one query
-    polygon broadcast against many points."""
+@arrow_udf(BooleanType())
+def st_contains_point(poly: pa.Array, x: pa.Array, y: pa.Array) -> pa.Array:
+    """ST_Contains(polygon, point) via ray-cast (D8); false for a NULL
+    polygon. Decodes each distinct polygon once per batch — the common
+    shape is one query polygon broadcast against many points."""
     cache: dict[bytes, tuple] = {}
-    xs = x.to_numpy("f8")
-    ys = y.to_numpy("f8")
+    xs = np.asarray(x, "f8")
+    ys = np.asarray(y, "f8")
     out = np.zeros(len(poly), dtype=bool)
-    for i, p in enumerate(poly):
+    for i, p in enumerate(poly.to_pylist()):
         if p is None:
             continue
-        key = bytes(p)
-        geom = cache.get(key)
+        geom = cache.get(p)
         if geom is None:
-            geom = cache[key] = wkb.decode(key)
+            geom = cache[p] = wkb.decode(p)
         out[i] = wkb.contains(geom, xs[i], ys[i])
-    return pd.Series(out)
+    return pa.array(out)
 
 
-@pandas_udf(BinaryType())
-def st_buffer(g: pd.Series, dist: pd.Series, segs: pd.Series) -> pd.Series:
+def _buffer(v: bytes, d, n) -> bytes:
+    kind, val = wkb.decode(v)
+    if kind != "Point":
+        raise ValueError("st_buffer implemented for points only")
+    d = float(d)  # SQL literals may arrive as decimal.Decimal
+    n = int(n)
+    ang = np.linspace(0.0, 2 * np.pi, n, endpoint=False)
+    ring = np.column_stack([val[0] + d * np.cos(ang), val[1] + d * np.sin(ang)])
+    ring = np.vstack([ring, ring[:1]])
+    return wkb.encode(("Polygon", [ring]))
+
+
+@arrow_udf(BinaryType())
+def st_buffer(g: pa.Array, dist: pa.Array, segs: pa.Array) -> pa.Array:
     """Point buffer -> regular polygon approximation (D9; points only —
     the reference's shapely closure covers general buffer, flagged hard
     and lowest-priority in SURVEY.md §7.M2)."""
-
-    def one(v, d, n):
-        if v is None:
-            return None
-        kind, val = wkb.decode(v)
-        if kind != "Point":
-            raise ValueError("st_buffer implemented for points only")
-        d = float(d)  # SQL literals may arrive as decimal.Decimal
-        n = int(n)
-        ang = np.linspace(0.0, 2 * np.pi, n, endpoint=False)
-        ring = np.column_stack(
-            [val[0] + d * np.cos(ang), val[1] + d * np.sin(ang)]
-        )
-        ring = np.vstack([ring, ring[:1]])
-        return wkb.encode(("Polygon", [ring]))
-
-    return pd.Series([one(v, d, n) for v, d, n in zip(g, dist, segs)])
+    return _per_row(_buffer, pa.binary(), g, dist, segs)
 
 
 def _douglas_peucker(a: np.ndarray, tol: float) -> np.ndarray:
@@ -305,38 +284,33 @@ def _douglas_peucker(a: np.ndarray, tol: float) -> np.ndarray:
     return a[keep]
 
 
-@pandas_udf(BinaryType())
-def st_simplify(g: pd.Series, tol: pd.Series) -> pd.Series:
+def _simplify(v: bytes, tol) -> bytes:
+    kind, val = wkb.decode(v)
+    if kind == "LineString":
+        return wkb.encode((kind, _douglas_peucker(val, tol)))
+    if kind == "Polygon":
+        return wkb.encode((kind, [_douglas_peucker(r, tol) for r in val]))
+    return v  # other kinds pass through unchanged
+
+
+@arrow_udf(BinaryType())
+def st_simplify(g: pa.Array, tol: pa.Array) -> pa.Array:
     """Douglas-Peucker simplification for LineString/Polygon rings (D9)."""
-
-    def one(v, t):
-        if v is None:
-            return None
-        kind, val = wkb.decode(v)
-        if kind == "LineString":
-            return wkb.encode((kind, _douglas_peucker(val, t)))
-        if kind == "Polygon":
-            return wkb.encode((kind, [_douglas_peucker(r, t) for r in val]))
-        return v  # other kinds pass through unchanged
-
-    return pd.Series([one(v, t) for v, t in zip(g, tol)])
+    return _per_row(_simplify, pa.binary(), g, tol)
 
 
-@pandas_udf(IntegerType())
-def st_num_geometries(g: pd.Series) -> pd.Series:
+def _num_geometries(v: bytes) -> int:
+    kind, val = wkb.decode(v)
+    if kind in ("MultiPoint", "MultiLineString", "MultiPolygon", "GeometryCollection"):
+        return len(val)
+    return 1
+
+
+@arrow_udf(IntegerType())
+def st_num_geometries(g: pa.Array) -> pa.Array:
     """ST_NumGeometries: part count of a Multi*/GeometryCollection,
     1 for a single geometry (PostGIS semantics), None for NULL."""
-
-    def one(v):
-        if v is None:
-            return None
-        kind, val = wkb.decode(v)
-        if kind in ("MultiPoint", "MultiLineString", "MultiPolygon",
-                    "GeometryCollection"):
-            return len(val)
-        return 1
-
-    return pd.Series([one(v) for v in g], dtype="object")
+    return _per_row(_num_geometries, pa.int32(), g)
 
 
 _UDFS = {
@@ -357,7 +331,15 @@ _UDFS = {
 }
 
 
+_REGISTERED: weakref.WeakSet[SparkSession] = weakref.WeakSet()
+
+
 def register_sql(spark: SparkSession) -> None:
-    """Expose the ST_* UDFs to spark.sql string queries (§2.G)."""
+    """Expose the ST_* UDFs to spark.sql string queries (§2.G), once per
+    session: a session counts as done only after every registration
+    returned, so one that failed part-way registers again."""
+    if spark in _REGISTERED:
+        return
     for name, fn in _UDFS.items():
         spark.udf.register(name, fn)
+    _REGISTERED.add(spark)

@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geoparquet_python_spark.geo import covering, wkb
-from geoparquet_python_spark.geo.functions import BBOX_FIELDS, st_envelope
+from geoparquet_python_spark.geo.functions import BBOX_FIELDS, envelope, st_envelope
 
 GEO_KEY = b"geo"
 # Pre-spec key the reference used (SURVEY.md §0.2 — exact name uncertain,
@@ -64,17 +64,6 @@ COVERING_COL = "bbox"  # the GeoParquet 1.1 bbox covering column
 # Footer key of a part file whose COVERING_COL this writer computed from
 # the geometry itself: the value names the column that is exact.
 EXACT_COVERING_KEY = b"geoparquet_python_spark.exact_covering"
-
-
-_WKB_TYPE_NAMES = {
-    1: "Point",
-    2: "LineString",
-    3: "Polygon",
-    4: "MultiPoint",
-    5: "MultiLineString",
-    6: "MultiPolygon",
-    7: "GeometryCollection",
-}
 
 
 def _geo_column_entry(
@@ -140,7 +129,7 @@ def _type_code_names(codes: set[int]) -> list[str]:
     variants (1000/2000/3000 offsets) map to the suffixed spec form."""
     names = []
     for c in sorted(codes):
-        base = _WKB_TYPE_NAMES.get(c % 1000)
+        base = wkb._NAMES.get(c % 1000)
         if base is None:
             continue
         suffix = {0: "", 1: " Z", 2: " M", 3: " ZM"}.get(c // 1000, "")
@@ -152,20 +141,10 @@ def add_bbox_column(df: DataFrame, geometry_col: str = "geometry") -> DataFrame:
     """Materialize the GeoParquet-1.1 covering column: a
     {xmin,ymin,xmax,ymax} struct. Plain comparisons against its fields
     are pushed to Parquet row-group stats by Spark's scan — this column
-    IS the spatial index at 100 TB. ``write_geoparquet`` builds the same
-    column inside its own pass (``_covering_column``) instead."""
+    IS the spatial index at 100 TB. The ``st_envelope`` Arrow UDF runs
+    ``functions.envelope`` on each batch; ``write_geoparquet`` calls the
+    same function inside its own pass instead."""
     return df.withColumn(COVERING_COL, st_envelope(F.col(geometry_col)))
-
-
-def _covering_column(geometry: pa.Array) -> pa.StructArray:
-    """The covering struct of one Arrow batch, from ``wkb.bounds``. NaN
-    (null geometry) bounds become null fields, as Spark makes them when
-    ``st_envelope`` returns the same values through a pandas UDF."""
-    b = wkb.bounds(geometry)
-    return pa.StructArray.from_arrays(
-        [pa.array(b[:, i], pa.float64(), from_pandas=True) for i in range(4)],
-        names=BBOX_FIELDS,
-    )
 
 
 def write_geoparquet(
@@ -232,7 +211,7 @@ def write_geoparquet(
         for batch in batches:
             if compute_covering:
                 batch = batch.append_column(
-                    COVERING_COL, _covering_column(batch.column(geometry_col))
+                    COVERING_COL, envelope(batch.column(geometry_col))
                 )
             buffered.append(batch)
             rows += batch.num_rows
@@ -285,7 +264,7 @@ def write_geoparquet(
         tbl = df.limit(0).toArrow()
         if compute_covering:
             tbl = tbl.append_column(
-                COVERING_COL, _covering_column(tbl.column(geometry_col).combine_chunks())
+                COVERING_COL, envelope(tbl.column(geometry_col).combine_chunks())
             )
         tbl = tbl.replace_schema_metadata(_footer_metadata(
             tbl.schema.metadata,

@@ -27,7 +27,7 @@ for coarser-than-envelope coverings.
 When the covering EQUALS the envelope (a lake ``write_geoparquet``
 built and ``read_geoparquet`` read, see ``geo.covering``), the atom ≡
 the injected conjuncts, so the atom is dropped and the query plans no
-pandas-UDF stage for it. Both sides compare the same float64 bounds
+Arrow-UDF stage for it. Both sides compare the same float64 bounds
 from ``wkb.bounds``, which never gives a non-NULL geometry a NaN bound
 (NaN coordinates are skipped, an empty geometry is (inf, inf, -inf,
 -inf)); a NULL geometry has all four covering fields NULL, so the
@@ -99,9 +99,10 @@ def rewrite_spatial_sql(
 def geo_sql(
     spark: SparkSession, sql: str, bbox_col: str = "bbox"
 ) -> DataFrame:
-    """``spark.sql`` for spatial queries: registers the ST_* UDFs and
-    runs the pushdown-rewritten statement, without the UDF atoms whose
-    covering the analyzed plan shows to be the exact envelope."""
+    """``spark.sql`` for spatial queries: registers the ST_* UDFs (once
+    per session) and runs the pushdown-rewritten statement, without the
+    UDF atoms whose covering the analyzed plan shows to be the exact
+    envelope."""
     register_sql(spark)
     geoms = frozenset(m.group(1) for m in _PAT.finditer(sql) if "." not in m.group(1))
     if geoms and _QUERY.match(sql):

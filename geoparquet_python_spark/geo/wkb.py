@@ -3,8 +3,8 @@
 Reference parity: the reference round-trips geometry as WKB via shapely
 (`geoparquet/__init__.py:30≈` encode ``geom.wkb`` per row, `:60≈` decode
 ``shapely.wkb.loads`` per row — both per-row Python loops). Here the
-codec is a self-contained batch library: decode/encode whole pandas
-Series of WKB bytes inside one pandas-UDF call, with a numpy
+codec is a self-contained batch library: decode/encode a whole Arrow
+batch of WKB bytes inside one Arrow-UDF call, with a numpy
 ``frombuffer`` fast path for the all-points case (zero per-row Python in
 the common layout). ``bounds`` and ``type_codes`` go one step further
 and read a pyarrow binary array's offsets, validity and data buffers
@@ -189,10 +189,17 @@ def decode_points(bufs) -> tuple[np.ndarray, np.ndarray]:
 # ---------------------------------------------- columnar Arrow-buffer paths
 
 
-def _arrow_views(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+def _arrow_views(arr) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """numpy views of a pyarrow binary array's buffers: (data bytes,
     per-row start, per-row length, per-row validity). Honors the array
-    offset, so sliced arrays work; nothing is copied but the offsets."""
+    offset, so sliced arrays work; nothing is copied but the offsets.
+    Input that is not yet an Arrow array (a list or pandas Series of
+    bytes) is converted first, and an all-NULL array of Arrow's null
+    type (an untyped SQL NULL argument) is read as binary."""
+    if not isinstance(arr, pa.Array):
+        arr = pa.array(arr, pa.binary())
+    elif pa.types.is_null(arr.type):
+        arr = arr.cast(pa.binary())
     if not (pa.types.is_binary(arr.type) or pa.types.is_large_binary(arr.type)):
         raise TypeError(f"expected a binary Arrow array, got {arr.type}")
     n = len(arr)

@@ -331,3 +331,68 @@ def test_untyped_null_arguments_keep_their_results(spark):
     assert r.hit is None and r.inside is False
     assert r.x is None and r.a is None and r.t is None and r.k is None
     assert tuple(r.e) == (None,) * 4
+
+
+# ------------------------------------------------- one registration per session
+
+
+@pytest.fixture
+def count_registrations(monkeypatch):
+    """Counts ``spark.udf.register`` calls; ``fail_at`` (1-based) makes
+    that call raise."""
+    from pyspark.sql.udf import UDFRegistration
+
+    real = UDFRegistration.register
+    state = {"calls": 0, "fail_at": None}
+
+    def counting(self, name, f, returnType=None):
+        state["calls"] += 1
+        if state["calls"] == state["fail_at"]:
+            raise RuntimeError("registration failed")
+        return real(self, name, f, returnType)
+
+    monkeypatch.setattr(UDFRegistration, "register", counting)
+    return state
+
+
+def test_second_registration_in_a_session_makes_no_register_calls(spark, count_registrations):
+    from geoparquet_python_spark.geo.sqlrewrite import geo_sql
+
+    gf._REGISTERED.discard(spark)
+    gf.register_sql(spark)
+    assert count_registrations["calls"] == len(gf._UDFS)
+    gf.register_sql(spark)
+    assert geo_sql(spark, "SELECT ST_X(ST_Point(1.5D, 2.0D)) AS x").first().x == 1.5
+    assert count_registrations["calls"] == len(gf._UDFS)
+
+
+def test_registration_that_fails_part_way_registers_again(spark, count_registrations):
+    gf._REGISTERED.discard(spark)
+    count_registrations["fail_at"] = 5
+    with pytest.raises(RuntimeError, match="registration failed"):
+        gf.register_sql(spark)
+    assert spark not in gf._REGISTERED
+    count_registrations.update(calls=0, fail_at=None)
+    gf.register_sql(spark)
+    assert count_registrations["calls"] == len(gf._UDFS)
+    assert spark in gf._REGISTERED
+
+
+# ------------------------------------------------------------ one UDF style
+
+
+def test_every_st_udf_is_an_arrow_udf_and_functions_has_no_pandas():
+    """One UDF style for the ST_* layer: every registered function is a
+    scalar Arrow UDF, and geo/functions.py does not import pandas."""
+    from pyspark.util import PythonEvalType
+
+    for name, fn in gf._UDFS.items():
+        assert fn.evalType == PythonEvalType.SQL_SCALAR_ARROW_UDF, name
+    imported = set()
+    for node in ast.walk(ast.parse(inspect.getsource(gf))):
+        if isinstance(node, ast.Import):
+            imported |= {a.name.split(".")[0] for a in node.names}
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            imported.add(node.module.split(".")[0])
+            imported |= {a.name for a in node.names}
+    assert "pandas" not in imported and "pandas_udf" not in imported, imported

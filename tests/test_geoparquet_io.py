@@ -448,7 +448,7 @@ def test_vectorized_read_udfs_keep_row_semantics(spark):
     decimal window literals compare as doubles."""
     from decimal import Decimal
 
-    import pandas as pd
+    import pyarrow as pa
 
     from geoparquet_python_spark.geo.functions import (
         register_sql,
@@ -462,17 +462,17 @@ def test_vectorized_read_udfs_keep_row_semantics(spark):
         [[(0.0, 0.0), (4.0, 0.0), (4.0, 4.0), (0.0, 0.0)],
          [(2.0, 1.0), (3.0, 1.0), (3.0, 2.0), (2.0, 1.0)]],
     ))
-    g = pd.Series([wkb.encode(("Point", (5.0, 5.0))), None, poly, holed,
-                   wkb.encode(("Point", (-1.0, 0.5)))])
-    area = st_area.func(g)
-    assert area[0] == 0.0 and area[4] == 0.0 and np.isnan(area[1])
+    g = pa.array([wkb.encode(("Point", (5.0, 5.0))), None, poly, holed,
+                  wkb.encode(("Point", (-1.0, 0.5)))], pa.binary())
+    area = st_area.func(g).to_pylist()
+    assert area[0] == 0.0 and area[4] == 0.0 and area[1] is None
     assert area[2] == wkb.area(wkb.decode(poly))
     assert area[3] == wkb.area(wkb.decode(holed))
 
-    win = [pd.Series([v] * len(g)) for v in (Decimal("0.0"), Decimal("0.0"),
-                                              Decimal("4.5"), Decimal("4.5"))]
+    win = [pa.array([v] * len(g)) for v in (Decimal("0.0"), Decimal("0.0"),
+                                            Decimal("4.5"), Decimal("4.5"))]
     hit = st_envelope_intersects.func(g, *win)
-    assert hit.tolist() == [False, None, True, True, False]
+    assert hit.to_pylist() == [False, None, True, True, False]
 
     register_sql(spark)
     rows = spark.sql(
